@@ -237,31 +237,6 @@ def main():
         "session_warmup_sec": session_warmup,
         "idle_wait_sec": waited,
     }
-    # surface the latest N-vs-4N scaling evidence (tools/bench_scaling.py —
-    # BENCH/BASELINE.md has the full protocol) in the one-line bench record
-    scaling_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                                "BENCH", "scaling.json")
-    if os.path.exists(scaling_path):
-        with open(scaling_path) as f:
-            sc = json.load(f)
-        out["scaling"] = {
-            "levels": sorted(int(k) for k in sc.get("levels", {})),
-            "efficiency_steady": sc.get("scaling_efficiency_steady"),
-            "efficiency_steady_median_leg":
-                sc.get("scaling_efficiency_steady_median_leg"),
-            "efficiency_full": sc.get("scaling_efficiency_full"),
-        }
-    fs_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                           "BENCH", "fetch_stage_scaling.json")
-    if os.path.exists(fs_path):
-        with open(fs_path) as f:
-            fs = json.load(f)
-        out["fetch_stage_scaling"] = {
-            "levels": sorted(int(k) for k in fs.get("levels", {})),
-            "urls_per_sec": {k: v.get("urls_per_sec")
-                             for k, v in fs.get("levels", {}).items()},
-            "efficiency": fs.get("fetch_stage_scaling_efficiency"),
-        }
     print(json.dumps(out))
 
 

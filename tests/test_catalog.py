@@ -18,10 +18,10 @@ def test_append_compaction_bounds_delta_dirs(spark, tmp_path):
     rows = {(x["round"], x["key"]) for x in store.read("t").collect()}
     assert rows == {(r, f"k{r}") for r in range(1, n_rounds + 1)}
     # delta dir count is bounded (compacted at COMPACT_AT)
-    assert len(store._append["t"]) < StateStore.COMPACT_AT
+    assert len(store._tables["append"]["t"]) < StateStore.COMPACT_AT
     on_disk = [d for d in os.listdir(tmp_path / "st" / "tables" / "t")
                if d.startswith("v")]
-    assert len(on_disk) == len(store._append["t"])
+    assert len(on_disk) == len(store._tables["append"]["t"])
 
     # a fresh store resumes from the compacted checkpoint identically
     store2 = StateStore(spark, str(tmp_path / "st"))
@@ -44,36 +44,6 @@ def test_late_append_commits_atomically(spark, tmp_path):
     assert "metrics" in ck["append"]  # same atomic pointer flip
 
 
-def test_cow_to_merge_migration_keeps_rows(spark, tmp_path):
-    """Resuming a cow-format checkpoint and committing the table's first
-    MergeDelta must adopt the cow version as the merge base (P5 across the
-    format change) — not drop the pre-existing rows."""
-    root = str(tmp_path / "st3")
-    store = StateStore(spark, root)
-    old = spark.createDataFrame(
-        [("a", 1), ("b", 2), ("c", 3)], "page_id string, n int")
-    store.commit(1, {"pages": old})  # cow-format commit, as the old engine
-
-    # fresh store = crash-resume on the new (merge-format) engine
-    store2 = StateStore(spark, root)
-    upd = spark.createDataFrame([("b", 20), ("d", 4)], "page_id string, n int")
-    dels = spark.createDataFrame([("c",)], "page_id string")
-    store2.commit(2, {}, merge={
-        "pages": MergeDelta(rows=upd, keys=["page_id"], dels=dels)})
-
-    rows = {(r["page_id"], r["n"]) for r in store2.read("pages").collect()}
-    assert rows == {("a", 1), ("b", 20), ("d", 4)}
-    # the checkpoint no longer lists pages as cow (single-mode invariant)
-    with open(os.path.join(root, "CHECKPOINT")) as f:
-        ck = json.load(f)
-    assert "pages" not in ck["cow"] and "pages" in ck["merge"]
-
-    # and a third resume still reads the merged view
-    store3 = StateStore(spark, root)
-    rows3 = {(r["page_id"], r["n"]) for r in store3.read("pages").collect()}
-    assert rows3 == rows
-
-
 def test_mixed_mode_checkpoint_fails_loudly(spark, tmp_path):
     root = str(tmp_path / "st4")
     store = StateStore(spark, root)
@@ -88,30 +58,69 @@ def test_mixed_mode_checkpoint_fails_loudly(spark, tmp_path):
         StateStore(spark, root)
 
 
-def test_fold_pool_rejects_same_table_in_two_jobs(spark, tmp_path):
-    """The parallel fold pool's safety argument is per-table version
-    allocation — two concurrent jobs for ONE table would race the version
-    scan. The engine never schedules that (append and merge tables are
-    disjoint), but the store itself doesn't forbid committing one name in
-    both modes; the round whose compaction AND fold both target it must
-    fail loudly instead of racing."""
-    store = StateStore(spark, str(tmp_path / "stf"))
-    # drop the fold-size floor so KB-sized deltas absorb every round, the
-    # regime this race test needs (production keeps the r7 floor)
-    os.environ["X227F_MIN_FOLD_BYTES"] = "0"
-    try:
-        def df(r):
-            return spark.createDataFrame(
-                [(r, f"k{r}")], "round int, key string")
+def test_table_commits_in_one_mode_only(spark, tmp_path):
+    """A table is committed in exactly one mode: naming it under a second
+    mode — in the same commit or a later one — raises before anything is
+    published, and the store keeps its last checkpoint."""
+    root = str(tmp_path / "stm")
+    store = StateStore(spark, root)
 
-        with pytest.raises(AssertionError, match="unique table names"):
-            # merge deltas fold every round here (delta size ≈ base size),
-            # so the commit crossing COMPACT_AT appends schedules both jobs
-            for r in range(1, StateStore.COMPACT_AT + 2):
-                store.commit(r, {}, {"t": df(r)},
-                             merge={"t": MergeDelta(df(r), ["key"])})
-    finally:
-        del os.environ["X227F_MIN_FOLD_BYTES"]
+    def df(r):
+        return spark.createDataFrame([(r, f"k{r}")], "round int, key string")
+
+    with pytest.raises(ValueError, match="in append mode"):
+        store.commit(1, {}, {"t": df(1)},
+                     merge={"t": MergeDelta(df(1), ["key"])})
+    assert not store.exists("t") and store.round == 0
+    store.commit(1, {}, {"t": df(1)})
+    with pytest.raises(ValueError, match="in append mode"):
+        store.commit(2, {"t": df(2)})
+    with pytest.raises(ValueError, match="in append mode"):
+        store.commit(2, {}, merge={"t": MergeDelta(df(2), ["key"])})
+    # a late append is staged after the main writes, still before the flip
+    with pytest.raises(ValueError, match="in merge mode"):
+        store.commit(2, {}, late_append=lambda: {"u": df(2)},
+                     merge={"u": MergeDelta(df(2), ["key"])})
+    resumed = StateStore(spark, root)
+    assert resumed.round == store.round == 1
+    assert [r["round"] for r in resumed.read("t").collect()] == [1]
+
+
+def test_checkpoint_keys_after_compaction_and_fold(spark, tmp_path,
+                                                  monkeypatch):
+    """Pins the checkpoint JSON format that resume and perfbench's
+    per-round store stats parse, after a round that both compacts an
+    append table and folds a merge table."""
+    # fold every merge delta into the base, whatever its size
+    monkeypatch.setattr(StateStore, "MERGE_STACK_MAX", 1)
+    root = str(tmp_path / "stk")
+    store = StateStore(spark, root)
+    for r in range(1, StateStore.COMPACT_AT + 1):
+        rows = spark.createDataFrame([(r, f"k{r}")], "round int, key string")
+        store.commit(r, {"c": rows}, {"a": rows},
+                     stats={"n": r},
+                     merge={"m": MergeDelta(rows, ["key"])})
+    with open(os.path.join(root, "CHECKPOINT")) as f:
+        ck = json.load(f)
+    with open(os.path.join(root, "checkpoints",
+                           f"r{StateStore.COMPACT_AT:06d}.json")) as f:
+        assert json.load(f) == ck
+    assert list(ck) == ["round", "cow", "append", "merge", "stats"]
+    assert ck["round"] == StateStore.COMPACT_AT
+    assert ck["stats"] == {"n": StateStore.COMPACT_AT}
+    assert set(ck["cow"]) == {"c"} and isinstance(ck["cow"]["c"], int)
+    # the round-COMPACT_AT commit compacted the append table to one version
+    assert len(ck["append"]["a"]) == 1
+    ent = ck["merge"]["m"]
+    assert sorted(ent) == ["base", "base_bytes", "delta_bytes", "deltas",
+                           "keys", "last_bytes"]
+    # ...and folded the merge table's delta into a new base
+    assert isinstance(ent["base"], int) and ent["base_bytes"] > 0
+    assert ent["deltas"] == [] and ent["delta_bytes"] == []
+    assert ent["keys"] == ["key"] and ent["last_bytes"] > 0
+    rows = {(x["round"], x["key"]) for x in store.read("m").collect()}
+    assert rows == {(r, f"k{r}") for r in range(1, StateStore.COMPACT_AT + 1)}
+    assert StateStore(spark, root).read("a").count() == StateStore.COMPACT_AT
 
 
 def test_commit_falls_back_to_serial_on_unmaterialized_cache(

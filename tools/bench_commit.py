@@ -56,7 +56,7 @@ def run_leg(spark, state_rows: int, batch: int, deltas: int) -> dict:
         t0 = time.monotonic()
         store.commit(r, {}, merge={"pages": MergeDelta(d, ["page_id"])})
         dt = time.monotonic() - t0
-        (compact if len(store._merge["pages"]["deltas"]) == 0
+        (compact if len(store._tables["merge"]["pages"]["deltas"]) == 0
          else plain).append(round(dt, 3))
     n_final = store.read("pages").count()
     shutil.rmtree(root, ignore_errors=True)

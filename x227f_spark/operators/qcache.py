@@ -37,22 +37,31 @@ def scoped(df: DataFrame) -> DataFrame:
     return df
 
 
+def unpersist(df: DataFrame) -> None:
+    """Release ``df``'s blocks: a localCheckpoint (a ``LogicalRDD`` plan)
+    frees its RDD blocks, which ``DataFrame.unpersist`` cannot see; any
+    other DataFrame drops its cache entry. Best-effort: the
+    ContextCleaner's periodic GC reclaims anything missed, and a stopped
+    session has nothing to free."""
+    try:
+        plan = df._jdf.queryExecution().analyzed()
+        if plan.getClass().getSimpleName() == "LogicalRDD":
+            plan.rdd().unpersist(False)
+        else:
+            df.unpersist(blocking=False)
+    except Exception:
+        pass
+
+
 def release_caches() -> None:
-    """Unpersist every block registered since the last release. Handles
-    both CacheManager entries (persist) and localCheckpoint blocks, which
-    live at the RDD level and are invisible to ``DataFrame.unpersist``.
+    """Unpersist every block registered since the last release (both
+    CacheManager entries and localCheckpoint blocks, see ``unpersist``).
     Release callbacks are one-shot: the list is cleared after firing, so
     owners re-registering on the next scope never accumulate duplicates
     across scope cycles."""
     global _SCOPED, _ON_RELEASE
     for df in _SCOPED:
-        try:
-            df.unpersist(blocking=False)
-            plan = df._jdf.queryExecution().analyzed()
-            if plan.getClass().getSimpleName() == "LogicalRDD":
-                plan.rdd().unpersist(False)
-        except Exception:
-            pass  # session already stopped — nothing to free
+        unpersist(df)
     _SCOPED = []
     callbacks, _ON_RELEASE = _ON_RELEASE, []
     for fn in callbacks:

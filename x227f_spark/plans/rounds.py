@@ -38,6 +38,7 @@ from ..model import VIRTUAL_EPOCH
 from ..operators import fetch as fetch_ops
 from ..operators.bloom import IncrementalBloom, anti_join_new
 from ..operators.pagerank import pagerank_iterations
+from ..operators.qcache import unpersist
 from ..sources.catalog import MergeDelta, StateStore
 from ..functions.urlnorm import (
     hosts_list_contains_col,
@@ -151,33 +152,17 @@ class CrawlEngine:
         # plan-blowup regression guard (computed when X227F_PLAN_GUARD=1)
         self.last_timing: dict[str, float] = {}
         self.last_plan_len: int = 0
-        # driver-side scalars maintained across rounds (persisted in the
-        # checkpoint's stats; recomputed once on resume of a pre-stats store).
-        # node ids are dense 0..N-1 by construction, so max_id = count-1.
-        st = self.store.stats
-        if "seen_count" in st:
-            self._seen_count = int(st["seen_count"])
-            self._edges_maybe_nonempty = bool(st.get("edges_nonempty", True))
-        elif self.store.exists("seen"):
-            self._seen_count = self.table("seen").count()
-            self._edges_maybe_nonempty = True
-        else:
-            self._seen_count = 0
-            self._edges_maybe_nonempty = False
-        # queue length / max queue_pos ride the checkpoint stats too — the
-        # per-round queue.agg() job they replace was pure control-plane floor
-        if "queue_len" in st:
-            self._queue_len = int(st["queue_len"])
-            self._max_pos = int(st["max_pos"])
-        elif self.store.exists("queue"):
-            qrow = self.table("queue").agg(
-                F.count("*").alias("n"), F.max("queue_pos").alias("mx")).first()
-            self._queue_len = qrow["n"]
-            self._max_pos = qrow["mx"] if qrow["mx"] is not None else -1
-        else:
-            self._queue_len = 0
-            self._max_pos = -1
-
+        # driver-side scalars maintained across rounds, persisted in the
+        # stats of every checkpoint from the round-0 bootstrap commit on
+        # (the per-round count/agg jobs they replace were pure control-plane
+        # floor). Node ids are dense 0..N-1, so max_id = seen_count-1.
+        st = self.store.stats if self._bootstrapped() else {
+            "seen_count": 0, "edges_nonempty": False,
+            "queue_len": 0, "max_pos": -1}
+        self._seen_count = int(st["seen_count"])
+        self._edges_maybe_nonempty = bool(st["edges_nonempty"])
+        self._queue_len = int(st["queue_len"])
+        self._max_pos = int(st["max_pos"])
 
     def _sub(self, key: str, t_start: float) -> None:
         """Sub-stage timing attribution (keys with a dot are diagnostics
@@ -287,8 +272,11 @@ class CrawlEngine:
             seconds=round_no * self.cfg.round_seconds)
 
     # -- bootstrap (data.rs:117-178) -----------------------------------------
+    def _bootstrapped(self) -> bool:
+        return self.store.round > 0 or self.store.exists("queue")
+
     def _bootstrap(self) -> None:
-        if self.store.round > 0 or self.store.exists("queue"):
+        if self._bootstrapped():
             return
         sp = self.cfg.starting_point
         u = Url.parse(sp)
@@ -472,43 +460,27 @@ class CrawlEngine:
                 self._max_pos = max(self._max_pos, int(qn["mx"]))
 
         if n_selected == 0:
-            staged = {"scores": scores}
-            merges = {"queue": queue_delta,
-                      "discovered": MergeDelta(
-                          self.spark.createDataFrame(
-                              [], SCHEMAS["discovered"]),
-                          ["node_id"], dels=consumed)}
+            # nothing to fetch: commit the scores, the queue delta and the
+            # consumed discovered nodes only
+            staged, appended, counts = {"scores": scores}, {}, (0, 0)
+            merges = {"discovered": MergeDelta(
+                self.spark.createDataFrame([], SCHEMAS["discovered"]),
+                ["node_id"], dels=consumed)}
+        else:
+            # ---- fetch + extract (operators/fetch.py) ----------------------
+            fetched, errors, btns, media_new, fetched_n = \
+                self._fetch(selected, cache, now, n_selected)
+            _mark("fetch")
 
-            def _late_empty():
-                _apply_queue_obs()
-                dur = int((time.monotonic() - t0) * 1000)
-                return {"metrics": self.spark.createDataFrame(
-                    [(r, 0, 0, 0, self._queue_len, self._seen_count, dur)],
-                    SCHEMAS["metrics"])}
-
-            self.store.commit(r, staged, {}, stats=self._stats,
-                              late_append=_late_empty, merge=merges)
-            _mark("write")
-            self._finish_round({**staged,
-                                **{k: m.rows for k, m in merges.items()}})
-            self.last_timing = tm
-            return {"round": r, "admitted": 0, "fetched": 0, "failed": 0,
-                    "timing": tm}
-
-        # ---- fetch + extract (operators/fetch.py) --------------------------
-        fetched, errors, btns, media_new, fetched_n = \
-            self._fetch(selected, cache, now, n_selected)
-        _mark("fetch")
-
-        # ---- commit ---------------------------------------------------------
-        staged, appended, merges, counts = self._commit_plan(
-            r, now, selected, n_selected, fetched, fetched_n, errors, btns,
-            pages, seen, consumed, scores)
+            # ---- commit -----------------------------------------------------
+            staged, appended, merges, counts = self._commit_plan(
+                r, now, selected, n_selected, fetched, fetched_n, errors,
+                btns, pages, seen, consumed, scores)
+            media = self.table("media")
+            appended["media"] = media_new.join(
+                media.select("media_ref"), "media_ref", "left_anti")
+            _mark("plan")
         merges["queue"] = queue_delta
-        media = self.table("media")
-        appended["media"] = media_new.join(
-            media.select("media_ref"), "media_ref", "left_anti")
-        _mark("plan")
 
         def _late():
             _apply_queue_obs()
@@ -589,19 +561,12 @@ class CrawlEngine:
         self._max_pos = max(self._max_pos, mx)
 
     def _drop_round_persists(self) -> None:
-        for df in self._round_persists:
-            df.unpersist(blocking=False)
+        # free localCheckpoint blocks now too — the state parquet is the
+        # durable copy; waiting for the ContextCleaner's GC-triggered
+        # cleanup grows block-manager memory unboundedly over a long crawl
+        for df in self._round_persists + self._round_cuts:
+            unpersist(df)
         self._round_persists = []
-        # free localCheckpoint blocks now — the state parquet is the durable
-        # copy; waiting for the ContextCleaner's GC-triggered cleanup grows
-        # block-manager memory unboundedly over a long crawl
-        for df in self._round_cuts:
-            try:
-                plan = df._jdf.queryExecution().analyzed()
-                if plan.getClass().getSimpleName() == "LogicalRDD":
-                    plan.rdd().unpersist(False)
-            except Exception:
-                pass  # best-effort; periodic GC cleanup is the fallback
         self._round_cuts = []
 
     def _stats(self) -> dict:

@@ -11,28 +11,24 @@ import os
 
 from pyspark.sql import SparkSession
 
+from .operators.qcache import unpersist
 
-def get_spark(cores: int | None = None, shuffle_partitions: int | None = None,
-              app_name: str = "x227f_spark", extra_conf: dict | None = None,
+
+def get_spark(cores: int | None = None, app_name: str = "x227f_spark",
+              extra_conf: dict | None = None,
               driver_memory: str | None = None) -> SparkSession:
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    if shuffle_partitions is None:
-        env_sp = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
-        if env_sp:
-            shuffle_partitions = int(env_sp)
-        else:
-            # 2x cores: over-decompose so dynamic task scheduling absorbs
-            # stragglers (at exactly 1 task/core every stage barrier waits
-            # on the slowest partition) without paying per-task Python-UDF
-            # setup on too many tiny tasks. AQE coalescing still merges
-            # genuinely small shuffles. A real cluster sizes this the same
-            # way (2-4x total executor cores).
-            shuffle_partitions = 2 * cores
     builder = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        # 2x cores: over-decompose so dynamic task scheduling absorbs
+        # stragglers (at exactly 1 task/core every stage barrier waits on
+        # the slowest partition) without paying per-task Python-UDF setup
+        # on too many tiny tasks. AQE coalescing still merges genuinely
+        # small shuffles. A real cluster sizes this the same way (2-4x
+        # total executor cores).
+        .config("spark.sql.shuffle.partitions", str(2 * cores))
         .config("spark.default.parallelism", str(cores))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -124,12 +120,7 @@ def _prewarm(spark: SparkSession, cores: int) -> None:
         ck = (df.limit(1_000).repartition(2, "k").sortWithinPartitions("k")
               .localCheckpoint(eager=True))
         ck.write.format("noop").mode("overwrite").save()
-        try:
-            plan = ck._jdf.queryExecution().analyzed()
-            if plan.getClass().getSimpleName() == "LogicalRDD":
-                plan.rdd().unpersist(False)
-        except Exception:
-            pass
+        unpersist(ck)
     except Exception:
         pass  # prewarm is best-effort; a failure only costs warm-up
     try:
@@ -177,12 +168,7 @@ def _prewarm(spark: SparkSession, cores: int) -> None:
                            F.round("score", 6).alias("score")) \
                    .localCheckpoint(eager=True)
         ck.count()
-        try:
-            plan = ck._jdf.queryExecution().analyzed()
-            if plan.getClass().getSimpleName() == "LogicalRDD":
-                plan.rdd().unpersist(False)
-        except Exception:
-            pass
+        unpersist(ck)
         contrib.unpersist(blocking=False)
         nodes.unpersist(blocking=False)
     except Exception:

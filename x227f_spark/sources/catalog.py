@@ -6,7 +6,8 @@ processed.rs:225-230): every crawl round commits *all* changed tables in one
 atomic step, and a killed job resumes from the last committed checkpoint
 (P5, data.rs:104-114).
 
-Three table modes:
+Three table modes; a table is committed in exactly one of them for its
+whole life (checked on every checkpoint load and every commit):
 
 - **cow** (copy-on-write): each commit writes a full new version directory —
   the stand-in for Iceberg ``overwritePartitions`` (used for ``scores``,
@@ -57,32 +58,21 @@ recomputes the identical result from the previous checkpoint.
 from __future__ import annotations
 
 import json
+import logging
 import os
 import shutil
+import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
+from functools import partial
+from itertools import combinations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+_log = logging.getLogger(__name__)
 
-def commit_write_threads(cores: int = 8) -> int:
-    """Bounded commit-write pool size (see the concurrency note in
-    ``StateStore.commit``). Read per-commit so tests/benches can flip it.
-
-    Default scales with the session's parallelism: a 1M round stages ~7
-    write jobs, and a fixed pool of 4 serializes them into two waves with
-    a one-job tail wave that idles most of a 16-core box (measured in the
-    r5 scaling legs: write stage speedup 2.37x vs ~3x for the data plane).
-    ``max(4, cores // 2)`` keeps the 4-core behavior identical while
-    letting wider sessions run the whole mix in one wave.
-
-    An explicitly set env value wins outright; values <= 1 mean fully
-    serial writes (r6 ADVICE: the old ``env if env > 0`` silently turned
-    the 0 opt-out into the computed parallel pool)."""
-    env = os.environ.get("X227F_COMMIT_WRITE_THREADS")
-    if env is not None:
-        return max(int(env), 1)
-    return max(4, cores // 2)
+MODES = ("cow", "append", "merge")
 
 
 def _dir_bytes(path: str) -> int:
@@ -98,6 +88,34 @@ def _dir_bytes(path: str) -> int:
     return total
 
 
+def _merge_entry(ent: dict, **changes) -> dict:
+    """Copy of a merge table's checkpoint entry, with ``changes`` applied:
+    ``{"base": int|None, "deltas": [int...], "keys": [col...],
+    "base_bytes": int, "delta_bytes": [int...], "last_bytes": int}``."""
+    out = {"base": ent.get("base"), "deltas": list(ent.get("deltas", [])),
+           "keys": list(ent["keys"]),
+           "base_bytes": int(ent.get("base_bytes", 0)),
+           "delta_bytes": list(ent.get("delta_bytes", [])),
+           "last_bytes": int(ent.get("last_bytes", 0))}
+    out.update(changes)
+    return out
+
+
+def _mode(tables: dict, name: str) -> str | None:
+    return next((m for m in MODES if name in tables[m]), None)
+
+
+def _versions(tables: dict, name: str) -> list[int]:
+    """Version dirs the table maps reference for ``name``."""
+    if name in tables["cow"]:
+        return [tables["cow"][name]]
+    if name in tables["merge"]:
+        ent = tables["merge"][name]
+        return ([ent["base"]] if ent["base"] is not None else []) \
+            + ent["deltas"]
+    return list(tables["append"].get(name, []))
+
+
 @dataclass
 class MergeDelta:
     """One round's change set for a merge-on-read table.
@@ -111,6 +129,21 @@ class MergeDelta:
     keys: list[str]
     dels: DataFrame | None = None
 
+    def frame(self) -> DataFrame:
+        """The delta as written: upserts (``_ts`` false) plus tombstone key
+        rows (``_ts`` true, null payload). Key groups present in the delta
+        replace the base group wholesale at read time."""
+        delta = self.rows.withColumn("_ts", F.lit(False))
+        if self.dels is None:
+            return delta
+        key_set = set(self.keys)
+        tomb = self.dels.select(*self.keys).select(
+            *[F.col(f.name).cast(f.dataType) if f.name in key_set
+              else F.lit(None).cast(f.dataType).alias(f.name)
+              for f in self.rows.schema.fields],
+            F.lit(True).alias("_ts"))
+        return delta.unionByName(tomb)
+
 
 class StateStore:
     def __init__(self, spark: SparkSession, root: str):
@@ -118,16 +151,10 @@ class StateStore:
         self.root = root
         os.makedirs(os.path.join(root, "tables"), exist_ok=True)
         os.makedirs(os.path.join(root, "checkpoints"), exist_ok=True)
-        self._cow: dict[str, int] = {}
-        self._append: dict[str, list[int]] = {}
         # per-table bytes of the most recent write — feeds the adaptive
         # write-spread sizing (driver-side fs metadata; not persisted: the
         # first write after a resume just uses the full spread once)
         self._last_write_bytes: dict[str, int] = {}
-        # name -> {"base": int|None, "deltas": [int...], "keys": [col...]}
-        self._merge: dict[str, dict] = {}
-        self.round = 0
-        self.stats: dict = {}
         self.last_timing: dict = {}  # per-phase seconds of the last commit
         self._load_checkpoint()
 
@@ -139,28 +166,25 @@ class StateStore:
         try:
             with open(self._ptr_path()) as f:
                 ck = json.load(f)
-            self._cow = dict(ck["cow"])
-            self._append = {k: list(v) for k, v in ck["append"].items()}
-            self._merge = {k: {"base": v.get("base"),
-                               "deltas": list(v.get("deltas", [])),
-                               "keys": list(v["keys"]),
-                               "base_bytes": int(v.get("base_bytes", 0)),
-                               "delta_bytes": list(v.get("delta_bytes", [])),
-                               "last_bytes": int(v.get("last_bytes", 0))}
-                           for k, v in ck.get("merge", {}).items()}
-            self.round = int(ck["round"])
-            self.stats = dict(ck.get("stats", {}))
-            # commit() migrates cow→merge by adopting the cow version as the
-            # merge base, so a table in BOTH maps means a corrupt/foreign
-            # checkpoint — fail loudly rather than let read() pick one.
-            mixed = sorted(set(self._cow) & set(self._merge))
+        except FileNotFoundError:
+            ck = {"round": 0, "cow": {}, "append": {}, "merge": {}}
+        # mode -> table map, in checkpoint JSON order: cow {name: v},
+        # append {name: [v...]}, merge {name: _merge_entry}
+        self._tables = {
+            "cow": dict(ck["cow"]),
+            "append": {k: list(v) for k, v in ck["append"].items()},
+            "merge": {k: _merge_entry(v)
+                      for k, v in ck.get("merge", {}).items()}}
+        self.round = int(ck["round"])
+        self.stats = dict(ck.get("stats", {}))
+        # a table listed under two modes means a corrupt/foreign checkpoint
+        # — fail loudly rather than let read() pick one
+        for a, b in combinations(MODES, 2):
+            mixed = sorted(set(self._tables[a]) & set(self._tables[b]))
             if mixed:
                 raise ValueError(
-                    f"checkpoint lists tables in both cow and merge modes: "
+                    f"checkpoint lists tables in both {a} and {b} modes: "
                     f"{mixed} (corrupt or hand-edited checkpoint)")
-        except FileNotFoundError:
-            self._cow, self._append, self.round, self.stats = {}, {}, 0, {}
-            self._merge = {}
 
     # write-spread keys: hash-repartition each staged table on its key so
     # parquet+zstd encoding parallelizes across cores instead of the 1-2
@@ -177,9 +201,8 @@ class StateStore:
     # down to the per-round delta regime: a 1M-design-point delta of
     # 100-300 MB still fans out to the full 2x-cores spread, while a
     # KB-sized bench delta stops paying 64 write tasks + 64-file dirs per
-    # table per round). Env-overridable for clusters with different I/O.
-    WRITE_TARGET_BYTES = int(os.environ.get(
-        "X227F_WRITE_SPREAD_TARGET_BYTES", str(4 * 1024 * 1024)))
+    # table per round)
+    WRITE_TARGET_BYTES = 4 * 1024 * 1024
 
     def _spread(self, name: str, df: DataFrame,
                 bytes_hint: int | None = None) -> DataFrame:
@@ -226,109 +249,82 @@ class StateStore:
     # times the commit plans re-embed the delta union (plan-guard bar)
     MERGE_STACK_SMALL = 4
 
+    # size floor on the merge absorb criterion: at sandbox/bench scale
+    # every table's base is tiny, so "deltas reached half the base" fired
+    # every round and each round paid a full-table rewrite of EVERY merge
+    # table (r7 baseline: write.folds ~1.5 s of each ~19 s bench round —
+    # pure write amplification for KB-sized state). Below the floor,
+    # deltas simply stack (reads take a few more broadcast anti-joins,
+    # bounded by MERGE_STACK_SMALL); at any real state size the 0.5x-base
+    # criterion dominates and behavior is unchanged.
+    MIN_FOLD_BYTES = 32 * 1024 * 1024
+
     def commit(self, round_no: int, overwrite: dict[str, DataFrame],
                append: dict[str, DataFrame] | None = None,
                stats: dict | None = None,
                late_append=None,
                merge: dict[str, MergeDelta] | None = None) -> None:
-        """Write staged tables as new version dirs, then atomically flip the
-        checkpoint pointer. One call per crawl round (P3). Table writes are
-        submitted concurrently (Spark schedules them side by side), which is
-        the snapshot-store analogue of Iceberg's parallel manifest writes.
+        """Commit one crawl round (P3): stage → write → fold → publish →
+        collect. Staging allocates a new version per table; the staged
+        tables are written as new version dirs (submitted concurrently —
+        Spark schedules them side by side, the snapshot-store analogue of
+        Iceberg's parallel manifest writes); tables past their fold
+        condition are rewritten as one version; the checkpoint pointer
+        flips atomically; superseded version dirs are removed.
 
         ``late_append``: optional ``() -> dict[name, DataFrame]`` invoked
         after the main writes finish but before the pointer flips — lets the
         caller derive tables (metrics) from Observations attached to the
         staged writes, so counting piggybacks on the write jobs instead of
-        costing separate actions."""
-        import time
-        from concurrent.futures import ThreadPoolExecutor
-
+        costing separate actions. ``stats`` may likewise be a callable,
+        evaluated after ``late_append``."""
         self.last_timing = {}
-        _t = time.monotonic()
+        t_last = [time.monotonic()]
 
-        def _phase(key):
-            nonlocal _t
+        def phase(key):
             now = time.monotonic()
-            self.last_timing[key] = round(now - _t, 3)
-            _t = now
+            self.last_timing[key] = round(now - t_last[0], 3)
+            t_last[0] = now
 
-        new_cow = dict(self._cow)
-        new_append = {k: list(v) for k, v in self._append.items()}
-        new_merge = {k: {"base": v["base"], "deltas": list(v["deltas"]),
-                         "keys": list(v["keys"]),
-                         "base_bytes": v.get("base_bytes", 0),
-                         "delta_bytes": list(v.get("delta_bytes", [])),
-                         "last_bytes": v.get("last_bytes", 0)}
-                     for k, v in self._merge.items()}
-        jobs = []
-        doomed_deltas: list[str] = []
+        new = {"cow": dict(self._tables["cow"]),
+               "append": {k: list(v)
+                          for k, v in self._tables["append"].items()},
+               "merge": {k: _merge_entry(v)
+                         for k, v in self._tables["merge"].items()}}
 
-        def _next_v(name):
-            m = new_merge.get(name, {})
-            return max([new_cow.get(name, 0), m.get("base") or 0]
-                       + new_append.get(name, [0])
-                       + list(m.get("deltas") or [0])) + 1
+        def stage(mode, tables):
+            jobs = []
+            for name, item in tables.items():
+                held = _mode(new, name) or mode
+                if held != mode:
+                    raise ValueError(
+                        f"table '{name}' is in {held} mode and cannot be "
+                        f"committed in {mode} mode (one mode per table)")
+                v = max(_versions(new, name), default=0) + 1
+                df = item
+                if mode == "cow":
+                    new["cow"][name] = v
+                elif mode == "append":
+                    new["append"].setdefault(name, []).append(v)
+                else:
+                    new["merge"].setdefault(
+                        name, _merge_entry({"keys": item.keys})
+                    )["deltas"].append(v)
+                    df = item.frame()
+                jobs.append((name, v, lambda df=df: df, None))
+            return jobs
 
-        for name, df in overwrite.items():
-            v = _next_v(name)
-            jobs.append((name, df, v))
-            new_cow[name] = v
-        for name, df in (append or {}).items():
-            v = _next_v(name)
-            jobs.append((name, df, v))
-            new_append.setdefault(name, []).append(v)
-        delta_written: list[tuple[str, int]] = []
-        for name, md in (merge or {}).items():
-            ent = new_merge.get(name)
-            if ent is None:
-                # First MergeDelta for this table. If a checkpoint written
-                # by the older copy-on-write format already holds a cow
-                # version, ADOPT it as the merge base — otherwise read()
-                # would prefer the (base=None) merge view and silently drop
-                # every pre-existing row, breaking the P5 resume guarantee
-                # across the format change.
-                cow_base = new_cow.pop(name, None)
-                ent = {"base": cow_base, "deltas": [], "keys": list(md.keys),
-                       "base_bytes": (_dir_bytes(self._table_path(name, cow_base))
-                                      if cow_base is not None else 0),
-                       "delta_bytes": [], "last_bytes": 0}
-                new_merge[name] = ent
-            # every round writes ONE O(batch) delta file: upserts
-            # (_ts=false) + tombstone keys (_ts=true, null payload). Key
-            # groups present in the delta replace the base group wholesale
-            # at read time. Folding deltas into the base (LSM absorption)
-            # happens AFTER the delta lands, from the on-disk parquet only
-            # — see the fold loop below.
-            delta = md.rows.withColumn("_ts", F.lit(False))
-            if md.dels is not None:
-                key_set = set(md.keys)
-                tomb = md.dels.select(*md.keys).select(
-                    *[F.col(f.name).cast(f.dataType) if f.name in key_set
-                      else F.lit(None).cast(f.dataType).alias(f.name)
-                      for f in md.rows.schema.fields],
-                    F.lit(True).alias("_ts"))
-                delta = delta.unionByName(tomb)
-            v = _next_v(name)
-            jobs.append((name, delta, v))
-            ent["deltas"].append(v)
-            delta_written.append((name, v))
+        def write(jobs, workers):
+            for (name, _v, _df, _h), b in zip(
+                    jobs, self._write_all(jobs, workers)):
+                self._last_write_bytes[name] = b
+                if name in new["merge"]:
+                    new["merge"][name]["delta_bytes"].append(b)
+                    new["merge"][name]["last_bytes"] = b
 
-        def _write(job):
-            name, df, v = job
-            path = self._table_path(name, v)
-            self._spread(name, df).write.mode("overwrite").parquet(path)
-            # dict assignment is atomic under the GIL; pool threads write
-            # disjoint names except on retry, where last-wins is fine
-            self._last_write_bytes[name] = _dir_bytes(path)
-
-        def _try_write(job):
-            try:
-                _write(job)
-                return None
-            except Exception as e:
-                return (job, e)
-
+        # -- stage + write ---------------------------------------------------
+        jobs = (stage("cow", overwrite) + stage("append", append or {})
+                + stage("merge", merge or {}))
         # Write concurrency: a BOUNDED pool, safe only because every input
         # the staged tables share is materialized before the pool starts.
         # The round-2 race — two concurrent writes materializing the same
@@ -346,171 +342,61 @@ class StateStore:
         # to serial writes (correct either way — the pool is purely a
         # throughput optimization). On a real deployment each table write
         # is its own job against the catalog (Iceberg commit) and the race
-        # does not exist at all. A transient failure is still retried
-        # once, serially. Set X227F_COMMIT_WRITE_THREADS=1 to force the
-        # fully serial round-3 behavior.
-        n_workers = commit_write_threads(
-            self.spark.sparkContext.defaultParallelism)
-        if n_workers > 1 and any(self._has_unloaded_cache(df)
-                                 for _n, df, _v in jobs):
-            import logging
-            logging.getLogger(__name__).warning(
+        # does not exist at all.
+        # Pool size scales with the session's parallelism: a 1M round
+        # stages ~7 write jobs, and a fixed pool of 4 serializes them into
+        # two waves with a one-job tail wave that idles most of a 16-core
+        # box (r5 scaling legs: write stage speedup 2.37x vs ~3x for the
+        # data plane).
+        workers = max(4, self.spark.sparkContext.defaultParallelism // 2)
+        if any(self._has_unloaded_cache(df()) for _n, _v, df, _h in jobs):
+            _log.warning(
                 "staged commit plan references an unmaterialized cache — "
                 "falling back to serial writes for this round (pool-unsafe "
                 "under the AQE cached-subplan race)")
-            n_workers = 1
-        if n_workers > 1:
-            with ThreadPoolExecutor(max_workers=n_workers) as ex:
-                failures = [f for f in ex.map(_try_write, jobs)
-                            if f is not None]
-        else:
-            failures = [f for f in map(_try_write, jobs) if f is not None]
-        for job, first_err in failures:
-            try:
-                _write(job)
-            except Exception as e:
-                raise RuntimeError(
-                    f"commit write failed twice for table '{job[0]}' "
-                    f"v{job[2]} (first error: {first_err})") from e
-        _phase("staged")
-
+            workers = 1
+        write(jobs, workers)
+        phase("staged")
         if late_append:
-            late_jobs = []
-            for name, df in (late_append() or {}).items():
-                v = _next_v(name)
-                late_jobs.append((name, df, v))
-                new_append.setdefault(name, []).append(v)
-            for job in late_jobs:
-                _write(job)
-        _phase("late")
+            write(stage("append", late_append() or {}), 1)
+        phase("late")
 
-        # ---- compactions + LSM folds -------------------------------------
-        # Unlike the staged-table writes above, every job below reads ONLY
-        # committed parquet files of its own table — no two tables share any
-        # subplan (cached or otherwise), so the AQE poisoned-cache race that
-        # forces care with the staged writes cannot exist here and the jobs
-        # run through the same bounded pool unconditionally. This is where
-        # the serial round-3 commit path left parallelism on the floor: an
-        # extreme-churn round folds all five merge tables back-to-back, and
-        # each fold alone is a small job that nowhere near saturates the
-        # executor slots.
-        fold_jobs = []  # (table_name, fn); appliers run serially afterwards
-
-        for name, versions in list(new_append.items()):
-            if len(versions) < self.COMPACT_AT:
-                continue
-
-            def _compact(name=name, versions=versions):
-                paths = [self._table_path(name, v) for v in versions]
-                merged = self.spark.read.parquet(*paths)
-                v = max(versions) + 1
-                hint = sum(_dir_bytes(p) for p in paths)
-                self._spread(name, merged, bytes_hint=hint) \
-                    .write.mode("overwrite").parquet(
-                        self._table_path(name, v))
-
-                def apply():
-                    doomed_deltas.extend(self._table_path(name, x)
-                                         for x in versions)
-                    new_append[name] = [v]
-                return apply
-            fold_jobs.append((name, _compact))
-
-        # merge-table size bookkeeping (driver-side fs metadata, delta dirs
-        # only — a handful of files each)
-        for name, v in delta_written:
-            b = _dir_bytes(self._table_path(name, v))
-            new_merge[name]["delta_bytes"].append(b)
-            new_merge[name]["last_bytes"] = b
-        # Absorption: once accumulated delta bytes reach half the base size
-        # (or the stack hits MERGE_STACK_MAX, or there is no base yet),
-        # fold base+deltas into a new base. The fold reads ONLY the
-        # committed parquet files — scans, anti-joins, one union — never
-        # the round's live plans, so it composes with any producer plan
-        # and costs pure I/O-bounded work. Light-churn rounds (batch ≪
-        # state, the 10^10 design point) fold rarely: amortized write is
-        # ≤3x batch. Extreme-churn rounds (batch ≈ state) fold every
-        # round: one delta + one full write, the LSM equivalent of the
-        # old copy-on-write cost.
-        # Size floor on the absorb criterion: at sandbox/bench scale every
-        # table's base is tiny, so "deltas reached half the base" fired
-        # every round and each round paid a full-table rewrite of EVERY
-        # merge table (r7 baseline: write.folds ~1.5 s of each ~19 s bench
-        # round — pure write amplification for KB-sized state). Below the
-        # floor, deltas simply stack (reads take a few more broadcast
-        # anti-joins, bounded by MERGE_STACK_MAX); at any real state size
-        # the 0.5x-base criterion dominates and behavior is unchanged.
-        min_fold = int(os.environ.get("X227F_MIN_FOLD_BYTES",
-                                      str(32 * 1024 * 1024)))
-        for name, ent in list(new_merge.items()):
-            dsum = sum(ent.get("delta_bytes") or [])
-            if not ent["deltas"]:
-                continue
-            # sub-floor tables still cap their stack at MERGE_STACK_SMALL:
-            # every committed-plan reference embeds the whole delta union,
-            # so an unbounded small-state stack regrows the round-1 plan
-            # blowup (tests/test_plan_guard.py) — and folding a table this
-            # small is by definition cheap. Big tables never hit this arm.
-            small_cap = ((ent.get("base_bytes", 0) + dsum) < min_fold
-                         and len(ent["deltas"]) >= self.MERGE_STACK_SMALL)
-            if not (ent["base"] is None
-                    or len(ent["deltas"]) >= self.MERGE_STACK_MAX
-                    or small_cap
-                    or dsum >= max(0.5 * ent.get("base_bytes", 0),
-                                   min_fold)):
-                continue
-
-            def _fold(name=name, ent=ent, dsum=dsum):
-                merged = self._merge_view(name, ent)
-                v = _next_v(name)
-                hint = ent.get("base_bytes", 0) + dsum
-                self._spread(name, merged, bytes_hint=hint) \
-                    .write.mode("overwrite").parquet(
-                        self._table_path(name, v))
-
-                def apply():
-                    if ent["base"] is not None:
-                        doomed_deltas.append(
-                            self._table_path(name, ent["base"]))
-                    doomed_deltas.extend(self._table_path(name, x)
-                                         for x in ent["deltas"])
-                    new_merge[name] = {
-                        "base": v, "deltas": [], "keys": list(ent["keys"]),
-                        "base_bytes": _dir_bytes(self._table_path(name, v)),
-                        "delta_bytes": [],
-                        "last_bytes": ent.get("last_bytes", 0)}
-                return apply
-            fold_jobs.append((name, _fold))
-
-        if fold_jobs:
-            # Concurrent-_next_v safety: each fold/compaction allocates its
-            # version from its own table's committed history, so the pool is
-            # race-free iff no two jobs target the same table. Today that
-            # holds by construction (one fold per merge table, compactions
-            # keyed off disjoint append tables — the two maps share no
-            # names); enforce it so a future same-table second job fails
-            # loudly instead of racing the version scan.
-            fold_names = [n for n, _fn in fold_jobs]
-            assert len(set(fold_names)) == len(fold_names), (
-                f"fold pool requires unique table names, got {fold_names}")
-            if n_workers > 1 and len(fold_jobs) > 1:
-                with ThreadPoolExecutor(max_workers=n_workers) as ex:
-                    appliers = list(ex.map(lambda j: j[1](), fold_jobs))
+        # -- fold ------------------------------------------------------------
+        # Each fold reads ONLY committed parquet files of its own table — no
+        # two tables share any subplan — so the folds run through the same
+        # pool (an extreme-churn round folds all five merge tables, each a
+        # small job that nowhere near saturates the executor slots). Folds
+        # never touch the round's live plans, so they compose with any
+        # producer plan and cost pure I/O-bounded work.
+        folds = []
+        for mode in ("append", "merge"):
+            for name, ent in new[mode].items():
+                if self._fold_due(mode, ent):
+                    old = _versions(new, name)
+                    hint = sum(_dir_bytes(self._table_path(name, x))
+                               for x in old)
+                    folds.append((name, max(old) + 1,
+                                  partial(self._view, name, new), hint))
+        doomed: list[str] = []
+        for (name, v, _df, _h), b in zip(folds,
+                                         self._write_all(folds, workers)):
+            doomed += [self._table_path(name, x)
+                       for x in _versions(new, name)]
+            if name in new["append"]:
+                new["append"][name] = [v]
             else:
-                appliers = [fn() for _n, fn in fold_jobs]
-            # metadata mutations (new_append/new_merge/doomed_deltas) stay
-            # single-threaded: each job returns an applier closure run here
-            for apply in appliers:
-                apply()
-        _phase("folds")
+                new["merge"][name] = _merge_entry(
+                    new["merge"][name], base=v, deltas=[], base_bytes=b,
+                    delta_bytes=[])
+        phase("folds")
 
+        # -- publish ---------------------------------------------------------
         # stats may be a callable evaluated *after* late_append — lets the
         # caller fold Observation results from the staged writes (queue
         # length, seen count) into the same atomic checkpoint
         ck_stats = (stats() if callable(stats) else stats) \
             if stats is not None else self.stats
-        ck = {"round": round_no, "cow": new_cow, "append": new_append,
-              "merge": new_merge, "stats": ck_stats}
+        ck = {"round": round_no, **new, "stats": ck_stats}
         ck_path = os.path.join(self.root, "checkpoints", f"r{round_no:06d}.json")
         with open(ck_path, "w") as f:
             json.dump(ck, f)
@@ -518,12 +404,75 @@ class StateStore:
         with open(tmp, "w") as f:
             json.dump(ck, f)
         os.replace(tmp, self._ptr_path())  # the atomic commit point
-        self._gc_old_versions(self._cow, new_cow)
-        for path in doomed_deltas:  # superseded by the compacted version
+
+        # -- collect ---------------------------------------------------------
+        self._gc_old_versions(new["cow"])
+        for path in doomed:  # superseded by the folded version
             shutil.rmtree(path, ignore_errors=True)
-        self._cow, self._append, self._merge = new_cow, new_append, new_merge
+        self._tables = new
         self.round = round_no
         self.stats = ck["stats"]
+
+    def _fold_due(self, mode: str, ent) -> bool:
+        """Whether a table's committed versions are rewritten as one.
+        ``ent`` is an append table's version list or a merge entry."""
+        if mode == "append":
+            return len(ent) >= self.COMPACT_AT
+        # Absorption: once accumulated delta bytes reach half the base size
+        # (or the stack hits MERGE_STACK_MAX, or there is no base yet),
+        # fold base+deltas into a new base. Light-churn rounds (batch ≪
+        # state, the 10^10 design point) fold rarely: amortized write is
+        # ≤3x batch. Extreme-churn rounds (batch ≈ state) fold every
+        # round: one delta + one full write, the LSM equivalent of the
+        # old copy-on-write cost.
+        n, dsum = len(ent["deltas"]), sum(ent["delta_bytes"])
+        if n == 0:
+            return False
+        # sub-floor tables still cap their stack at MERGE_STACK_SMALL:
+        # every committed-plan reference embeds the whole delta union,
+        # so an unbounded small-state stack regrows the round-1 plan
+        # blowup (tests/test_plan_guard.py) — and folding a table this
+        # small is by definition cheap. Big tables never hit this arm.
+        small_cap = (ent["base_bytes"] + dsum < self.MIN_FOLD_BYTES
+                     and n >= self.MERGE_STACK_SMALL)
+        return (ent["base"] is None or n >= self.MERGE_STACK_MAX or small_cap
+                or dsum >= max(0.5 * ent["base_bytes"], self.MIN_FOLD_BYTES))
+
+    def _write_version(self, name: str, v: int, df: DataFrame,
+                       bytes_hint: int | None) -> int:
+        """Spread ``df`` and write it as version ``v`` of ``name``; returns
+        the bytes written."""
+        path = self._table_path(name, v)
+        self._spread(name, df, bytes_hint).write.mode("overwrite").parquet(path)
+        return _dir_bytes(path)
+
+    def _write_all(self, jobs: list, workers: int) -> list[int]:
+        """Write ``(name, version, df_fn, bytes_hint)`` jobs through a
+        bounded pool of ``workers`` threads (serially when ``workers`` is 1
+        or there is a single job) and return the bytes each wrote. A failed
+        write is retried once, serially."""
+        def attempt(job):
+            name, v, df, hint = job
+            try:
+                return self._write_version(name, v, df(), hint), None
+            except Exception as e:
+                return None, e
+
+        if workers > 1 and len(jobs) > 1:
+            with ThreadPoolExecutor(max_workers=workers) as ex:
+                results = list(ex.map(attempt, jobs))
+        else:
+            results = [attempt(job) for job in jobs]
+        out = []
+        for job, (b, first_err) in zip(jobs, results):
+            if first_err is not None:
+                b, err = attempt(job)
+                if err is not None:
+                    raise RuntimeError(
+                        f"commit write failed twice for table '{job[0]}' "
+                        f"v{job[1]} (first error: {first_err})") from err
+            out.append(b)
+        return out
 
     @staticmethod
     def _has_unloaded_cache(df: DataFrame) -> bool:
@@ -547,7 +496,7 @@ class StateStore:
         except Exception:
             return True
 
-    def _read_parquet(self, path: str, schema: str | None,
+    def _read_parquet(self, paths: list[str], schema: str | None,
                       with_ts: bool = False) -> DataFrame:
         """Parquet read with an optional known schema — a caller-supplied
         schema (the engine passes its SCHEMAS entry) skips the per-read
@@ -560,10 +509,10 @@ class StateStore:
             if with_ts:
                 st = st.add("_ts", BooleanType())
             r = r.schema(st)
-        return r.parquet(path)
+        return r.parquet(*paths)
 
     def _merge_view(self, name: str, ent: dict,
-                    schema: str | None = None) -> DataFrame:
+                    schema: str | None = None) -> DataFrame | None:
         """Merged (current) view of a merge-on-read table with
         replace-key-group semantics: for every key present in any delta,
         the NEWEST delta containing it decides the key's group (its
@@ -586,12 +535,13 @@ class StateStore:
         from pyspark.sql import Window as W
 
         keys = ent["keys"]
-        base = (self._read_parquet(self._table_path(name, ent["base"]), schema)
+        base = (self._read_parquet([self._table_path(name, ent["base"])],
+                                   schema)
                 if ent["base"] is not None else None)
         if not ent["deltas"]:
             return base
         parts = [
-            self._read_parquet(self._table_path(name, v), schema,
+            self._read_parquet([self._table_path(name, v)], schema,
                                with_ts=True).withColumn("__mor_seq",
                                                         F.lit(i))
             for i, v in enumerate(ent["deltas"])
@@ -609,13 +559,11 @@ class StateStore:
         dkeys = alld.select(*keys).distinct()
         return base.join(dkeys, keys, "left_anti").unionByName(rows)
 
-    def _gc_old_versions(self, old_cow: dict[str, int],
-                         new_cow: dict[str, int], keep: int = 2) -> None:
-        for name, cur in new_cow.items():
+    def _gc_old_versions(self, cow: dict[str, int], keep: int = 2) -> None:
+        for name, cur in cow.items():
             tdir = os.path.join(self.root, "tables", name)
             if not os.path.isdir(tdir):
                 continue
-            protected = set(self._append.get(name, []))
             for entry in os.listdir(tdir):
                 if not entry.startswith("v"):
                     continue
@@ -623,7 +571,7 @@ class StateStore:
                     v = int(entry[1:])
                 except ValueError:
                     continue
-                if v <= cur - keep and v not in protected:
+                if v <= cur - keep:
                     shutil.rmtree(os.path.join(tdir, entry), ignore_errors=True)
 
     # -- reads --------------------------------------------------------------
@@ -631,27 +579,24 @@ class StateStore:
         return os.path.join(self.root, "tables", name, f"v{version:06d}")
 
     def exists(self, name: str) -> bool:
-        return (name in self._cow or name in self._append
-                or name in self._merge)
+        return _mode(self._tables, name) is not None
+
+    def _view(self, name: str, tables: dict,
+              schema: str | None = None) -> DataFrame | None:
+        """View of ``name`` as the given table maps commit it; None when
+        they reference no version of it."""
+        if name in tables["merge"]:
+            return self._merge_view(name, tables["merge"][name], schema)
+        paths = [self._table_path(name, v) for v in _versions(tables, name)]
+        return self._read_parquet(paths, schema) if paths else None
 
     def read(self, name: str, schema: str | None = None) -> DataFrame:
         """Committed view of a table; empty DF (with ``schema``) when the
         table has never been committed. A supplied ``schema`` also skips
         parquet footer inference on every read (see ``_read_parquet``)."""
-        if name in self._merge:
-            ent = self._merge[name]
-            if ent["base"] is not None or ent["deltas"]:
-                return self._merge_view(name, ent, schema)
-        paths = []
-        if name in self._cow:
-            paths.append(self._table_path(name, self._cow[name]))
-        for v in self._append.get(name, []):
-            paths.append(self._table_path(name, v))
-        if paths:
-            r = self.spark.read
-            if schema is not None:
-                r = r.schema(schema)
-            return r.parquet(*paths)
+        df = self._view(name, self._tables, schema)
+        if df is not None:
+            return df
         if schema is None:
             raise KeyError(f"table {name} not committed and no schema given")
         return self.spark.createDataFrame([], schema)
