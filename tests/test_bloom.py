@@ -61,9 +61,9 @@ def test_sharded_bloom_parity_at_1m(spark):
             .where(F.col("_bloom_hit")).count())
     assert hits / N_PROBE < 0.03
     # per-broadcast bitmap is sized for expected/S keys
-    shard_bytes = max(len(bc.value) for bc in sharded._shard_bcs.values())
-    assert shard_bytes < len(single.bits) / 2
-    assert len(sharded._shard_bcs) == 4
+    shard_bytes = max(len(bc.value) for bc in sharded.shards.values())
+    assert shard_bytes < len(single.shards[0].value) / 2
+    assert len(sharded.shards) == 4
     # exact anti-join equivalence through the sharded filter
     targets = spark.range(50_000).select(
         F.when(F.col("id") % 3 == 0,

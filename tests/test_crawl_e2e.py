@@ -85,3 +85,29 @@ def test_media_store(golden, engine):
     for ref, (data, ext) in want.items():
         assert got[ref] == (data, ext), ref
         assert hash_image(data) == ref  # content-addressing invariant
+
+
+def test_row_count_observation_fallback(spark, corpus, corpus_dir, cfg,
+                                        tmp_path, monkeypatch):
+    """Every counted lineage cut (selected, fetched, seen_new) must recover
+    its exact row count when the Observation comes back empty — a count
+    defaulted to 0 drops scheduled URLs, seen deltas or the edges flag and
+    the crawl drifts from the golden model."""
+    from x227f_spark.plans import rounds as R
+
+    real = R._obs_get
+
+    def _lost_counts(obs, defaults):
+        if set(defaults) == {"n"}:
+            return defaults
+        return real(obs, defaults)
+
+    monkeypatch.setattr(R, "_obs_get", _lost_counts)
+    eng = CrawlEngine(spark, corpus_dir, str(tmp_path / "state"), config=cfg)
+    eng.run(3)
+    model = GoldenModel(corpus, cfg)
+    model.run(3)
+    assert eng.trace_events() == [(t.round, t.seq, t.page_id, t.host,
+                                   t.action) for t in model.trace]
+    assert eng.seen_set() == model.seen_set()
+    assert eng.page_spans() == model.page_spans()

@@ -41,14 +41,20 @@ def _run(spark, approx_nodes):
     return rows
 
 
+@pytest.fixture(scope="module")
+def expected(spark):
+    # reference: the no-layout arm (what the golden suite exercises)
+    return _run(spark, approx_nodes=1)
+
+
 @pytest.mark.parametrize("approx_nodes",
                          [LAYOUT_MIN_NODES - 1, LAYOUT_MIN_NODES, None])
-def test_layout_threshold_is_semantics_free(spark, approx_nodes):
-    # reference: the no-layout arm (what the golden suite exercises)
-    expected = _run(spark, approx_nodes=1)
+def test_layout_threshold_is_semantics_free(spark, expected, approx_nodes):
     got = _run(spark, approx_nodes=approx_nodes)
     assert set(got) == set(expected)
     for node_id, score in expected.items():
         # both arms compute the same join-aggregate; only the physical
-        # layout differs, and the sums agree exactly on this graph
+        # layout differs. Partitioning can change the float summation
+        # order, so this holds to a tolerance, not bit for bit; on this
+        # graph each per-dst sum has at most 3 terms.
         assert got[node_id] == pytest.approx(score, abs=1e-12, rel=1e-12), node_id

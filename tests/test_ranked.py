@@ -11,19 +11,22 @@ from pyspark.sql import functions as F
 from x227f_spark.operators.ranked import global_row_number
 
 
-def _expected(df, order_by):
-    w = W.orderBy(*order_by)
-    return {r["k"]: r["rn"] for r in
-            df.withColumn("rn", F.row_number().over(w)).collect()}
+def _check(df, order_by, **kw):
+    got = global_row_number(df, order_by, "rn", **kw)
+    exp = {r["k"]: r["rn"] for r in
+           df.withColumn("rn", F.row_number().over(W.orderBy(*order_by)))
+           .collect()}
+    assert {r["k"]: r["rn"] for r in got.collect()} == exp
+    # the result must not leak the internal bucketing columns
+    assert set(got.columns) == set(df.columns) | {"rn"}
+    return exp
 
 
 def test_sampled_path_matches_window(spark):
     df = (spark.range(10_000)
           .select(F.col("id").alias("k"),
                   (F.xxhash64("id") % 1000).alias("score")))
-    got = global_row_number(df, [F.desc("score"), F.asc("k")], "rn")
-    exp = _expected(df, [F.desc("score"), F.asc("k")])
-    assert {r["k"]: r["rn"] for r in got.collect()} == exp
+    _check(df, [F.desc("score"), F.asc("k")])
 
 
 @pytest.mark.parametrize("gappy", [False, True])
@@ -35,41 +38,23 @@ def test_bounds_path_matches_window(spark, gappy):
     if gappy:
         base = base.where((F.col("k") % 7 != 0) & (F.col("k") < 2000)
                           | (F.col("k") > 9000))
-    got, total = global_row_number(base, ["k"], "rn",
-                                   bounds=(0, 10_000), return_count=True)
-    exp = _expected(base, ["k"])
-    assert {r["k"]: r["rn"] for r in got.collect()} == exp
-    assert total == len(exp)
+    _check(base, ["k"], bounds=(0, 10_000))
 
 
 def test_bounds_path_clamps_out_of_range_keys(spark):
     """Keys outside the advertised bounds land in the edge buckets —
     ordinals stay exact (the bounds are a balance hint, not a contract)."""
     df = spark.range(500).select((F.col("id") - 100).alias("k"))
-    got = global_row_number(df, ["k"], "rn", bounds=(0, 100))
-    exp = _expected(df, ["k"])
-    assert {r["k"]: r["rn"] for r in got.collect()} == exp
+    _check(df, ["k"], bounds=(0, 100))
 
 
 @pytest.mark.parametrize("bounds", [None, (0, 10_000)])
 def test_lazy_offsets_matches_window(spark, bounds):
-    """lazy_offsets expresses the prefix sum as a broadcast-joined plan
-    instead of a driver roundtrip — ordinals must match the
-    single-partition window exactly on both the sampled and bounds
-    bucketings, including under gaps/skew."""
+    """The prefix sum is a broadcast-joined plan, not a driver roundtrip —
+    ordinals must match the single-partition window exactly on both the
+    sampled and bounds bucketings, including under gaps/skew."""
+    # every third key missing above 500: gaps skew the buckets
     df = (spark.range(10_000)
           .select(F.col("id").alias("k"))
           .where((F.col("k") % 3 != 0) | (F.col("k") < 500)))
-    got = global_row_number(df, ["k"], "rn", bounds=bounds,
-                            lazy_offsets=True)
-    exp = _expected(df, ["k"])
-    assert {r["k"]: r["rn"] for r in got.collect()} == exp
-    # lazy result must not leak the internal bucketing columns
-    assert set(got.columns) == {"k", "rn"}
-
-
-def test_lazy_offsets_rejects_return_count(spark):
-    df = spark.range(10).select(F.col("id").alias("k"))
-    with pytest.raises(ValueError):
-        global_row_number(df, ["k"], "rn", lazy_offsets=True,
-                          return_count=True)
+    _check(df, ["k"], bounds=bounds)

@@ -166,17 +166,6 @@ class EngineConfig:
         default_factory=lambda: dict(HOST_CRAWL_DELAYS)
     )
     default_crawl_delay: int = DEFAULT_CRAWL_DELAY
-    # skew salting: hosts whose share of a round's fetch set exceeds
-    # 1/salt_target_partitions get split across ceil(share*partitions) salts.
-    shuffle_partitions: int = 32
-    bloom_fpp: float = 0.01
-    # force a JVM GC every K committed rounds so the ContextCleaner reclaims
-    # shuffle files / checkpoint blocks promptly (see rounds._finish_round)
-    gc_every_rounds: int = 4
-    # rounds that admit at least this many URLs force a GC every round:
-    # batching several big rounds' litter into one collection makes the
-    # async ContextCleaner compete with the following round's jobs
-    gc_big_round_urls: int = 200_000
     robots: tuple["RobotsRule", ...] = ()
 
     def _robots_rule(self, host: str) -> "RobotsRule | None":

@@ -8,19 +8,21 @@ optimization only — false positives cost a join probe, never correctness.
 
 Implementation: k xxhash64 hash functions computed JVM-side
 (``F.xxhash64`` with per-hash seed columns), per-partition numpy bitmaps
-packed executor-side (Arrow batches) and OR-merged with a treeReduce,
+packed executor-side (Arrow batches) and OR-merged on the executors,
 broadcast to executors, membership tested by a vectorized pandas UDF
 (numpy fancy indexing — no per-row Python).
 
-Scale note (10^10 keys): a single 1%-FPR bloom is ~12 GB — too big to
-broadcast whole. ``build_bloom(..., n_shards=S)`` implements the sharded
-design: keys route to a shard by ``pmod(xxhash64(key), S)``, each shard
-is an independent bitmap sized for ``expected/S`` keys and broadcast as
-its OWN broadcast variable, and the probe side is hash-partitioned on the
-shard id before probing — so a task only ever touches (and, on a real
-cluster, only ever *fetches*: Spark broadcasts are pulled lazily on first
-access) the one shard its partition needs. Per-task broadcast memory is
-total/S instead of total. The anti-join behind it is unchanged.
+Sharding (10^10 keys): a single 1%-FPR bloom is ~12 GB — too big to
+broadcast whole. Keys route to one of S shards by
+``pmod(xxhash64(key), S)``; each shard is an independent bitmap sized for
+``expected/S`` keys and broadcast as its OWN broadcast variable, and the
+probe side is hash-partitioned on the shard id before probing — so a task
+only ever touches (and, on a real cluster, only ever *fetches*: Spark
+broadcasts are pulled lazily on first access) the one shard its partition
+needs. Per-task broadcast memory is total/S instead of total. S = 1 is the
+same filter with one shard: every key is shard 0, so neither the build nor
+the probe exchanges on the shard id, and the build's partials OR-merge
+with a tree reduction. The anti-join behind the filter is unchanged.
 """
 
 from __future__ import annotations
@@ -34,68 +36,43 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 
+def _shard_col(key: Column, n_shards: int) -> Column:
+    if n_shards == 1:
+        return F.lit(0)
+    return F.pmod(F.xxhash64(F.lit(-1), key), F.lit(n_shards))
+
+
+def _position_cols(key: Column, m: int, k: int) -> list[Column]:
+    return [F.pmod(F.xxhash64(F.lit(i), key), F.lit(m)) for i in range(k)]
+
+
 class BloomFilter:
-    def __init__(self, bits: np.ndarray, m: int, k: int, broadcast):
-        self.bits = bits
-        self.m = m
-        self.k = k
-        self._broadcast = broadcast
+    """``shards`` maps shard id → broadcast bitmap; a shard absent from the
+    map saw no keys at build, so its probes are definite misses."""
 
-    def _position_cols(self, key: Column) -> list[Column]:
-        return [
-            F.pmod(F.xxhash64(F.lit(i), key), F.lit(self.m)).alias(f"_bloom_pos{i}")
-            for i in range(self.k)
-        ]
-
-    def might_contain(self, df: DataFrame, key: Column) -> DataFrame:
-        """Adds a boolean ``_bloom_hit`` column."""
-        bc = self._broadcast
-        k = self.k
-
-        @pandas_udf("boolean")
-        def _probe(*pos_cols: pd.Series) -> pd.Series:
-            bits = bc.value
-            hit = np.ones(len(pos_cols[0]), dtype=bool)
-            for p in pos_cols:
-                idx = p.to_numpy(dtype=np.int64)
-                hit &= (bits[idx >> 3] >> (idx & 7).astype(np.uint8)) & 1 == 1
-            return pd.Series(hit)
-
-        pos_names = [f"_bloom_pos{i}" for i in range(k)]
-        df = df.withColumns(dict(zip(pos_names, self._position_cols(key))))
-        df = df.withColumn("_bloom_hit", _probe(*[F.col(n) for n in pos_names]))
-        return df.drop(*pos_names)
-
-
-class ShardedBloomFilter:
-    """S independent per-shard bitmaps, each its own broadcast variable.
-    Same ``might_contain`` contract as :class:`BloomFilter`; the probe
-    repartitions on the shard id so each task touches one shard."""
-
-    def __init__(self, shard_bcs: dict, m: int, k: int, n_shards: int):
-        self._shard_bcs = shard_bcs
+    def __init__(self, shards: dict, m: int, k: int, n_shards: int):
+        self.shards = shards
         self.m = m
         self.k = k
         self.n_shards = n_shards
 
     def might_contain(self, df: DataFrame, key: Column) -> DataFrame:
-        bcs = self._shard_bcs
-        k, m, S = self.k, self.m, self.n_shards
+        """Adds a boolean ``_bloom_hit`` column."""
+        bcs = self.shards
 
         @pandas_udf("boolean")
         def _probe(shard: pd.Series, *pos_cols: pd.Series) -> pd.Series:
             sh = shard.to_numpy(dtype=np.int64)
-            hit = np.ones(len(sh), dtype=bool)
+            hit = np.zeros(len(sh), dtype=bool)
             pos = [p.to_numpy(dtype=np.int64) for p in pos_cols]
-            # group rows by shard; only the shards present in this batch
-            # have their broadcast fetched/touched
+            # only the shards present in this batch have their broadcast
+            # fetched/touched
             for s in np.unique(sh):
                 bc = bcs.get(int(s))
-                mask = sh == s
-                if bc is None:  # shard saw no keys at build: definite miss
-                    hit[mask] = False
+                if bc is None:
                     continue
                 bits = bc.value
+                mask = sh == s
                 h = np.ones(int(mask.sum()), dtype=bool)
                 for p in pos:
                     idx = p[mask]
@@ -103,14 +80,14 @@ class ShardedBloomFilter:
                 hit[mask] = h
             return pd.Series(hit)
 
-        shard_col = F.pmod(F.xxhash64(F.lit(-1), key), F.lit(S))
-        pos_names = [f"_bloom_pos{i}" for i in range(k)]
-        df = df.withColumn("_bloom_shard", shard_col)
+        pos_names = [f"_bloom_pos{i}" for i in range(self.k)]
         df = df.withColumns({
-            n: F.pmod(F.xxhash64(F.lit(i), key), F.lit(m))
-            for i, n in enumerate(pos_names)})
-        df = df.repartition(max(S, df.sparkSession.sparkContext
-                                .defaultParallelism), "_bloom_shard")
+            "_bloom_shard": _shard_col(key, self.n_shards),
+            **dict(zip(pos_names, _position_cols(key, self.m, self.k)))})
+        if self.n_shards > 1:
+            df = df.repartition(max(self.n_shards, df.sparkSession
+                                    .sparkContext.defaultParallelism),
+                                "_bloom_shard")
         df = df.withColumn("_bloom_hit", _probe(
             F.col("_bloom_shard"), *[F.col(n) for n in pos_names]))
         return df.drop("_bloom_shard", *pos_names)
@@ -138,80 +115,24 @@ def _size_params(expected: int, fpp: float) -> tuple[int, int]:
     return m, k
 
 
-def _bitmap_of(df: DataFrame, key: Column, m: int, k: int) -> np.ndarray:
-    """Distributed bitmap build: hash positions JVM-side, per-partition
-    numpy packing (Arrow batches), executor-side treeReduce OR. Only
-    bitmap-sized partials ever reach the driver."""
+def _or(a, b):
+    return b if a is None else a if b is None else np.bitwise_or(a, b)
+
+
+def _bitmaps(df: DataFrame, key: Column, m: int, k: int,
+             n_shards: int) -> dict[int, np.ndarray]:
+    """Distributed per-shard bitmap build: hash positions JVM-side, each
+    partition packs bitmaps (Arrow batches, numpy) only for the shards it
+    holds, and the partials OR-combine on the executors — nothing
+    key-proportional ever reaches the driver, only at most ``n_shards``
+    bitmaps. With S > 1 the keys are first repartitioned on the shard id
+    (~one shard per partition) and partials merge per shard; with S = 1
+    every partial is shard 0 and they merge with a tree reduction."""
     nbytes = (m >> 3) + 1
-    pos_df = df.select(*[
-        F.pmod(F.xxhash64(F.lit(i), key), F.lit(m)).alias(f"p{i}")
-        for i in range(k)
-    ])
-
-    def _partial(batches):
-        import pyarrow as pa
-
-        bits_p = np.zeros(nbytes, dtype=np.uint8)
-        for batch in batches:
-            for col in range(batch.num_columns):
-                idx = batch.column(col).to_numpy(zero_copy_only=False) \
-                    .astype(np.int64)
-                np.bitwise_or.at(bits_p, idx >> 3,
-                                 (1 << (idx & 7)).astype(np.uint8))
-        yield pa.RecordBatch.from_arrays(
-            [pa.array([bits_p.tobytes()], type=pa.binary())], names=["bits"])
-
-    partials = pos_df.mapInArrow(_partial, "bits binary")
-    bits = (partials.rdd
-            .map(lambda r: np.frombuffer(r["bits"], dtype=np.uint8))
-            .treeReduce(np.bitwise_or))
-    return np.asarray(bits, dtype=np.uint8).copy()  # own the buffer
-
-
-def build_bloom(df: DataFrame, key: Column, expected: int,
-                fpp: float = 0.01, n_shards: int = 1):
-    """Build a broadcast Bloom filter over ``key`` of ``df``.
-
-    Fully distributed: hash positions are computed JVM-side
-    (``F.xxhash64``), each partition packs its own bitmap with numpy
-    (Arrow-batched — no per-row Python), and the partials are OR-combined
-    with a ``treeReduce`` on the executors. Nothing key-proportional ever
-    reaches the driver — only ``ceil(log(P))`` bitmap-sized partials, then
-    the final bitmap (the thing being broadcast anyway). Round 1 collected
-    every distinct bit position to the driver (k×n rows), a multi-GB
-    driver funnel at 10^8 seen keys.
-    """
+    pos_df = df.select(_shard_col(key, n_shards).alias("_sh"),
+                       *_position_cols(key, m, k))
     if n_shards > 1:
-        return _build_sharded(df, key, expected, fpp, n_shards)
-    m, k = _size_params(expected, fpp)
-    bits = _bitmap_of(df, key, m, k)
-    bc = df.sparkSession.sparkContext.broadcast(bits)
-    return BloomFilter(bits, m, k, bc)
-
-
-def _build_sharded(df: DataFrame, key: Column, expected: int, fpp: float,
-                   n_shards: int) -> ShardedBloomFilter:
-    """Per-shard bitmaps built from shard-partitioned key sets. Each
-    partition packs bitmaps only for the shards it holds (after the
-    shard-hash repartition that is ~one shard per partition), partials
-    OR-combine per shard on the executors, and each shard becomes its own
-    broadcast — nothing whole-filter-sized exists anywhere."""
-    m, k = _size_params(max(expected // n_shards, 16), fpp)
-    maps = _shard_bitmaps_of(df, key, m, k, n_shards)
-    sc = df.sparkSession.sparkContext
-    shard_bcs = {s: sc.broadcast(b) for s, b in maps.items()}
-    return ShardedBloomFilter(shard_bcs, m, k, n_shards)
-
-
-def _shard_bitmaps_of(df: DataFrame, key: Column, m: int, k: int,
-                      n_shards: int) -> dict[int, np.ndarray]:
-    nbytes = (m >> 3) + 1
-
-    pos_df = df.select(
-        F.pmod(F.xxhash64(F.lit(-1), key), F.lit(n_shards)).alias("_sh"),
-        *[F.pmod(F.xxhash64(F.lit(i), key), F.lit(m)).alias(f"p{i}")
-          for i in range(k)],
-    ).repartition(n_shards, "_sh")
+        pos_df = pos_df.repartition(n_shards, "_sh")
 
     def _partial(batches):
         import pyarrow as pa
@@ -236,13 +157,29 @@ def _shard_bitmaps_of(df: DataFrame, key: Column, m: int, k: int,
                           type=pa.binary())],
                 names=["shard", "bits"])
 
-    partials = pos_df.mapInArrow(_partial, "shard int, bits binary")
-    merged = (partials.rdd
-              .map(lambda r: (r["shard"],
-                              np.frombuffer(r["bits"], dtype=np.uint8)))
-              .reduceByKey(np.bitwise_or)
-              .collect())  # <= n_shards (shard, bitmap) pairs
+    partials = (pos_df.mapInArrow(_partial, "shard int, bits binary").rdd
+                .map(lambda r: (r["shard"],
+                                np.frombuffer(r["bits"], dtype=np.uint8))))
+    if n_shards > 1:
+        merged = partials.reduceByKey(np.bitwise_or).collect()
+    else:
+        # treeAggregate, not treeReduce: a build over no keys has no
+        # partials and yields no shard (every probe a definite miss)
+        bits = partials.values().treeAggregate(None, _or, _or)
+        merged = [] if bits is None else [(0, bits)]
+    # own the buffers: the driver ORs later deltas into them in place
     return {int(s): np.asarray(b, dtype=np.uint8).copy() for s, b in merged}
+
+
+def build_bloom(df: DataFrame, key: Column, expected: int,
+                fpp: float = 0.01, n_shards: int = 1) -> BloomFilter:
+    """Build a broadcast Bloom filter over ``key`` of ``df`` with
+    ``n_shards`` shards, each sized for ``expected / n_shards`` keys."""
+    m, k = _size_params(expected // n_shards, fpp)
+    sc = df.sparkSession.sparkContext
+    return BloomFilter({s: sc.broadcast(b) for s, b in
+                        _bitmaps(df, key, m, k, n_shards).items()},
+                       m, k, n_shards)
 
 
 class IncrementalBloom:
@@ -267,8 +204,8 @@ class IncrementalBloom:
     O(state) rebuild, never correctness). Amortized over the doublings
     that is O(1) full scans per key, and under capacity the realized FPP
     is strictly better than the target. Shard count follows capacity
-    (``shards_for``), so the sharded path engages at the same thresholds
-    as the one-shot build; superseded broadcasts are unpersisted (not
+    (``shards_for``), so sharding engages at the same thresholds as the
+    one-shot build; superseded broadcasts are unpersisted (not
     destroyed — an evicted-and-recomputed cache partition may still probe
     an old filter object, and unpersisted broadcasts re-ship from the
     driver on access).
@@ -281,7 +218,7 @@ class IncrementalBloom:
         self._capacity = 0
         self._count = -1       # seen_count the current bitmaps cover
         self._upto = -1        # max first_seen_round folded in
-        self._bits = None      # np.ndarray (single) or dict (sharded)
+        self._bits: dict[int, np.ndarray] = {}
 
     def _broadcast(self, spark) -> None:
         old = self._filter
@@ -289,22 +226,16 @@ class IncrementalBloom:
         # snapshot (copy) at broadcast time: later rounds OR into the
         # driver-held arrays in place, and an executor re-fetching an
         # unpersisted broadcast must see the filter as of ITS round
-        if isinstance(self._bits, dict):
-            bcs = {s: sc.broadcast(b.copy()) for s, b in self._bits.items()}
-            m, k = self._mk
-            self._filter = ShardedBloomFilter(bcs, m, k, self._n_shards)
-        else:
-            m, k = self._mk
-            snap = self._bits.copy()
-            self._filter = BloomFilter(snap, m, k, sc.broadcast(snap))
+        self._filter = BloomFilter(
+            {s: sc.broadcast(b.copy()) for s, b in self._bits.items()},
+            *self._mk, self._n_shards)
         if old is not None:
             try:
-                if isinstance(old, ShardedBloomFilter):
-                    for bc in old._shard_bcs.values():
-                        bc.unpersist(False)
-                else:
-                    old._broadcast.unpersist(False)
+                for bc in old.shards.values():
+                    bc.unpersist(False)
             except Exception:
+                # best-effort release: a failed unpersist only leaves the
+                # old blocks to the ContextCleaner
                 pass
 
     def update(self, seen: DataFrame, key_col: str, seen_count: int,
@@ -320,26 +251,17 @@ class IncrementalBloom:
             # full (re)build, capacity-doubled so rebuilds amortize O(1)
             self._capacity = max(2 * seen_count, 2 * max(self.min_seen, 16))
             self._n_shards = shards_for(self._capacity, self.fpp)
-            if self._n_shards > 1:
-                self._mk = _size_params(
-                    max(self._capacity // self._n_shards, 16), self.fpp)
-                self._bits = _shard_bitmaps_of(seen, key, *self._mk,
-                                               self._n_shards)
-            else:
-                self._mk = _size_params(self._capacity, self.fpp)
-                self._bits = _bitmap_of(seen, key, *self._mk)
+            self._mk = _size_params(self._capacity // self._n_shards,
+                                    self.fpp)
+            self._bits = _bitmaps(seen, key, *self._mk, self._n_shards)
         elif seen_count != self._count:
             delta = seen.where(F.col("first_seen_round") > F.lit(self._upto))
-            if self._n_shards > 1:
-                for s, b in _shard_bitmaps_of(delta, key, *self._mk,
-                                              self._n_shards).items():
-                    if s in self._bits:
-                        np.bitwise_or(self._bits[s], b, out=self._bits[s])
-                    else:
-                        self._bits[s] = b
-            else:
-                np.bitwise_or(self._bits, _bitmap_of(delta, key, *self._mk),
-                              out=self._bits)
+            for s, b in _bitmaps(delta, key, *self._mk,
+                                 self._n_shards).items():
+                if s in self._bits:
+                    np.bitwise_or(self._bits[s], b, out=self._bits[s])
+                else:
+                    self._bits[s] = b
         else:
             return self._filter  # no new keys since the last update
         self._count = seen_count

@@ -66,18 +66,13 @@ def resolve_image_redirects(images: DataFrame) -> DataFrame:
     Returns resolved(url, f_found, f_status, f_content_type, f_bytes,
     f_declared_len, f_final_url). Amortized once per corpus, not per round.
     """
-    i0 = images.select(
-        F.col("url").alias("u0"), F.col("status").alias("s0"),
-        F.col("content_type").alias("c0"), F.col("redirect_to").alias("r0"),
-        F.col("bytes").alias("b0"), F.col("declared_len").alias("d0"))
-    i1 = images.select(
-        F.col("url").alias("u1"), F.col("status").alias("s1"),
-        F.col("content_type").alias("c1"), F.col("redirect_to").alias("r1"),
-        F.col("bytes").alias("b1"), F.col("declared_len").alias("d1"))
-    i2 = images.select(
-        F.col("url").alias("u2"), F.col("status").alias("s2"),
-        F.col("content_type").alias("c2"), F.col("redirect_to").alias("r2"),
-        F.col("bytes").alias("b2"), F.col("declared_len").alias("d2"))
+    def _hop(i):
+        # the images columns suffixed with the redirect hop (0, 1 or 2)
+        return images.select(*[F.col(c).alias(f"{a}{i}") for c, a in (
+            ("url", "u"), ("status", "s"), ("content_type", "c"),
+            ("redirect_to", "r"), ("bytes", "b"), ("declared_len", "d"))])
+
+    i0, i1, i2 = _hop(0), _hop(1), _hop(2)
 
     is_redir0 = F.col("r0").isNotNull() & (F.col("s0") >= 300) & (F.col("s0") < 400)
     df = i0.join(i1, F.when(is_redir0, F.col("r0")) == F.col("u1"), "left")
@@ -350,23 +345,25 @@ def budget_pass(cand: DataFrame, num_partitions: int = 32) -> DataFrame:
 # page-level fetch classification
 # ---------------------------------------------------------------------------
 
+def _location(u, s, r):
+    """Resolved Location ``r`` of a 3xx response for ``u``, if != ``u``."""
+    if u is None or r is None or s is None or not (300 <= s < 400):
+        return None
+    base = Url.parse(u)
+    tgt = base.join(r) if base is not None else None
+    if tgt is None:
+        return None
+    t = tgt.to_string()
+    return t if t != u else None
+
+
 @pandas_udf(StringType())
 def p6_target_udf(url: pd.Series, status: pd.Series,
                   redirect_to: pd.Series) -> pd.Series:
     """page.rs:128-137 — same-PageId redirect target, else null."""
     def _t(u, s, r):
-        if u is None or r is None or s is None or not (300 <= s < 400):
-            return None
-        base = Url.parse(u)
-        if base is None:
-            return None
-        tgt = base.join(r)
-        if tgt is None:
-            return None
-        t = tgt.to_string()
-        if t != u and page_id_of(t) == page_id_of(u):
-            return t
-        return None
+        t = _location(u, s, r)
+        return t if t is not None and page_id_of(t) == page_id_of(u) else None
 
     return pd.Series([_t(u, s, r) for u, s, r in zip(url, status, redirect_to)])
 
@@ -375,16 +372,5 @@ def p6_target_udf(url: pd.Series, status: pd.Series,
 def redirect_target_udf(res_url: pd.Series, status: pd.Series,
                         redirect_to: pd.Series) -> pd.Series:
     """mod.rs:37-45 — resolved Location of a 3xx, if != res_url."""
-    def _t(u, s, r):
-        if u is None or r is None or s is None or not (300 <= s < 400):
-            return None
-        base = Url.parse(u)
-        if base is None:
-            return None
-        tgt = base.join(r)
-        if tgt is None:
-            return None
-        t = tgt.to_string()
-        return t if t != u else None
-
-    return pd.Series([_t(u, s, r) for u, s, r in zip(res_url, status, redirect_to)])
+    return pd.Series([_location(u, s, r)
+                      for u, s, r in zip(res_url, status, redirect_to)])

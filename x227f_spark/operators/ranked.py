@@ -14,8 +14,8 @@ equivalent:
 2. rank *within* each partition (parallel sort, no data movement across
    the range partitions beyond the window's hash exchange);
 3. shift each partition's local ranks by the total count of rows in the
-   partitions before it — a prefix sum over ``num_partitions`` integers
-   on the driver (metadata, not data);
+   partitions before it — a prefix sum over ``num_partitions`` integers,
+   expressed as a plan (metadata, not data);
 4. broadcast-join the tiny offset table back.
 
 The result is byte-identical to the single-partition window **provided
@@ -51,23 +51,16 @@ def global_row_number(
     df: DataFrame,
     order_by: Sequence[Column | str],
     out_col: str,
-    num_partitions: int | None = None,
     persist: Callable[[DataFrame], DataFrame] | None = None,
-    return_count: bool = False,
     bounds: tuple[int, int] | None = None,
-    lazy_offsets: bool = False,
 ) -> DataFrame:
     """Add ``out_col`` = 1-based global row number of ``df`` under the
     total order ``order_by``, without a single-partition window.
 
     ``order_by`` entries may be column names or Column sort expressions
     (``F.desc(...)`` works). ``persist`` is a round-scoped cache hook
-    (CrawlEngine._persist); when None a plain ``.persist()`` is used and
-    freed lazily by Spark's ContextCleaner.
-
-    ``return_count=True`` returns ``(df, total_rows)`` — the total falls
-    out of the partition-size prefix sum for free, saving callers a
-    separate ``count()`` job.
+    (CrawlEngine._persist); when None the harness-scoped
+    ``qcache.scoped_persist`` is used.
 
     ``bounds=(lo, hi)``: when the (single, ascending, numeric) sort key's
     value range is already known to the caller — the scheduler maintains
@@ -78,28 +71,20 @@ def global_row_number(
     consumed prefix of the position space) costs balance, never
     correctness: ordinals come from the bucket-wise prefix sum either way.
 
-    ``lazy_offsets=True``: compute the prefix sum as a *plan* instead of
-    a driver roundtrip — the per-bucket counts become a
-    ``num_partitions``-row aggregate, the cumulative shift a window over
-    those few rows (a single tiny task, metadata scale — NOT a data-scale
-    single-partition window), broadcast-joined back. No action runs
-    inside this function at all; the offsets materialize as a broadcast
-    sub-stage of whatever job first consumes the result (the scheduler's
-    lineage cut), saving one blocking job submission + driver roundtrip
-    per call. Incompatible with ``return_count`` (no driver scalar exists
-    until an action runs — callers attach an ``observe()`` to the
-    downstream cut instead).
+    No action runs inside this function: the offsets materialize as a
+    broadcast sub-stage of whatever job first consumes the result (the
+    scheduler's lineage cut), so a caller needing the row total attaches
+    an ``observe()`` to that action.
 
-    Deadline note (r6 ADVICE): the lazy path materializes the bucket-count
-    aggregation (and, on first use, its whole upstream plan) inside a
-    broadcast exchange, so it must finish within
+    Deadline note (r6 ADVICE): the offsets plan materializes the
+    bucket-count aggregation (and, on first use, its whole upstream plan)
+    inside a broadcast exchange, so it must finish within
     ``spark.sql.broadcastTimeout`` — the engine session raises the
-    default (session.py) because a slow counts job under the eager path
-    was merely a slow round, not a TimeoutException.
+    default (session.py) so that a slow counts job stays a slow round,
+    not a TimeoutException.
     """
-    spark = df.sparkSession
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    num_partitions = int(df.sparkSession.conf.get(
+        "spark.sql.shuffle.partitions"))
     cols = [F.col(c) if isinstance(c, str) else c for c in order_by]
 
     if persist is None:
@@ -113,15 +98,11 @@ def global_row_number(
         key = cols[0]
         lo, hi = bounds
         span = max(hi - lo + 1, 1)
-        bucket = F.least(
+        local = df.withColumn(_PID, F.least(
             F.lit(num_partitions - 1),
             F.greatest(F.lit(0),
                        ((key.cast("double") - F.lit(float(lo)))
-                        * num_partitions / F.lit(float(span))).cast("int")))
-        w = W.partitionBy(_PID).orderBy(*cols)
-        local = (df.withColumn(_PID, bucket)
-                 .withColumn(_LRN, F.row_number().over(w)))
-        local = persist(local)
+                        * num_partitions / F.lit(float(span))).cast("int"))))
     else:
         # cache the INPUT before range-partitioning: RangePartitioner runs
         # a separate sampling job over the child plan to pick boundaries,
@@ -131,48 +112,26 @@ def global_row_number(
         # and the cache turns the double evaluation into compute-once +
         # one cache read
         df = persist(df)
-        ranged = df.repartitionByRange(num_partitions, *cols)
-        w = W.partitionBy(_PID).orderBy(*cols)
-        local = (ranged.withColumn(_PID, F.spark_partition_id())
-                 .withColumn(_LRN, F.row_number().over(w)))
-        # cache: the counts job below and the caller's downstream read it
-        local = persist(local)
+        local = (df.repartitionByRange(num_partitions, *cols)
+                 .withColumn(_PID, F.spark_partition_id()))
+    # cache: the bucket counts below and the caller's downstream read it
+    w = W.partitionBy(_PID).orderBy(*cols)
+    local = persist(local.withColumn(_LRN, F.row_number().over(w)))
 
-    if lazy_offsets and return_count:
-        # ValueError, not assert: the API contract must survive python -O
-        raise ValueError("lazy_offsets cannot return a driver count — "
-                         "attach an observe() to the downstream action")
-    if lazy_offsets:
-        # bucket sizes + cumulative shift, all lazy: the window runs over
-        # at most num_partitions aggregate rows (one tiny task), and the
-        # broadcast join keeps the data-scale side exchange-free
-        counts = local.groupBy(_PID).agg(F.count(F.lit(1)).alias("cnt"))
-        # partitionBy(lit(0)) is execution-identical here (all <=
-        # num_partitions aggregate rows land in one task either way) but
-        # marks the single-partition window as deliberate, silencing the
-        # per-round WindowExec warning in bench/driver logs
-        w_off = (W.partitionBy(F.lit(0)).orderBy(_PID)
-                 .rowsBetween(W.unboundedPreceding, -1))
-        off_df = counts.select(
-            F.col(_PID),
-            F.coalesce(F.sum("cnt").over(w_off), F.lit(0)).alias(_OFF))
-        return (local.join(F.broadcast(off_df), _PID)
-                .withColumn(out_col, (F.col(_OFF) + F.col(_LRN)).cast("long"))
-                .drop(_PID, _LRN, _OFF))
-
-    # partition sizes → driver prefix sum (num_partitions rows, metadata)
-    sizes = {r[_PID]: r["cnt"] for r in
-             local.groupBy(_PID).agg(F.count("*").alias("cnt")).collect()}
-    offsets, acc = [], 0
-    for pid in sorted(sizes):  # range partition ids ascend with the order
-        offsets.append((pid, acc))
-        acc += sizes[pid]
-    if not offsets:
-        out = local.withColumn(out_col, F.col(_LRN).cast("long")) \
-                   .drop(_PID, _LRN)
-        return (out, 0) if return_count else out
-    off_df = spark.createDataFrame(offsets, f"{_PID} int, {_OFF} long")
-    out = (local.join(F.broadcast(off_df), _PID)
-           .withColumn(out_col, (F.col(_OFF) + F.col(_LRN)).cast("long"))
-           .drop(_PID, _LRN, _OFF))
-    return (out, acc) if return_count else out
+    # bucket sizes + cumulative shift: the window runs over at most
+    # num_partitions aggregate rows (one tiny task, metadata scale — NOT a
+    # data-scale single-partition window), and the broadcast join keeps
+    # the data-scale side exchange-free
+    counts = local.groupBy(_PID).agg(F.count(F.lit(1)).alias("cnt"))
+    # partitionBy(lit(0)) is execution-identical here (all <=
+    # num_partitions aggregate rows land in one task either way) but
+    # marks the single-partition window as deliberate, silencing the
+    # per-round WindowExec warning in bench/driver logs
+    w_off = (W.partitionBy(F.lit(0)).orderBy(_PID)
+             .rowsBetween(W.unboundedPreceding, -1))
+    off_df = counts.select(
+        F.col(_PID),
+        F.coalesce(F.sum("cnt").over(w_off), F.lit(0)).alias(_OFF))
+    return (local.join(F.broadcast(off_df), _PID)
+            .withColumn(out_col, (F.col(_OFF) + F.col(_LRN)).cast("long"))
+            .drop(_PID, _LRN, _OFF))

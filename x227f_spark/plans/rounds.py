@@ -104,6 +104,13 @@ class CrawlEngine:
     # tests can lower it to exercise the bloom/sharded-bloom paths at
     # sandbox scale
     BLOOM_MIN_SEEN = 50_000
+    BLOOM_FPP = 0.01
+    # force a JVM GC every this-many committed rounds so the ContextCleaner
+    # reclaims shuffle files / checkpoint blocks promptly, and every round
+    # after one that admitted at least GC_BIG_ROUND_URLS (see
+    # _finish_round)
+    GC_EVERY_ROUNDS = 4
+    GC_BIG_ROUND_URLS = 200_000
 
     def __init__(self, spark: SparkSession, corpus_dir: str, state_dir: str,
                  config: EngineConfig | None = None,
@@ -118,7 +125,7 @@ class CrawlEngine:
         # incremental admission bloom (driver-held; rebuilt from the full
         # committed seen set only on first use / crash-resume / capacity
         # doubling — see bloom.IncrementalBloom)
-        self._ibloom = IncrementalBloom(fpp=self.cfg.bloom_fpp,
+        self._ibloom = IncrementalBloom(fpp=self.BLOOM_FPP,
                                         min_seen=self.BLOOM_MIN_SEEN)
 
         http = spark.read.parquet(f"{corpus_dir}/http.parquet")
@@ -195,6 +202,17 @@ class CrawlEngine:
         out = df.localCheckpoint(eager=True)
         self._round_cuts.append(out)
         return out
+
+    def _cut_count(self, df: DataFrame) -> tuple[DataFrame, int]:
+        """``_cut`` plus the cut's exact row count, read from an Observation
+        on the same eager materialization (no separate count job). On an
+        Observation fallback the count is recovered from the cut — a cheap
+        scan of materialized blocks — and never defaulted to 0: a spurious
+        0 would drop scheduled URLs, a seen delta, or the edges flag."""
+        obs = Observation()
+        out = self._cut(df.observe(obs, F.count(F.lit(1)).alias("n")))
+        n = _obs_get(obs, {"n": None})["n"]
+        return out, int(n) if n is not None else out.count()
 
     def _admit_ok_col(self, url_col, host_col):
         """Admission gate (data.rs:196-198 + robots Disallow), expanded to
@@ -381,8 +399,7 @@ class CrawlEngine:
         limit_n = max(cfg.queue_cap - queue_len, 0) + 1
         adding = global_row_number(
             cand, [F.desc("score"), F.asc("node_id")], "add_pos",
-            persist=self._persist,
-            lazy_offsets=True).where(F.col("add_pos") <= limit_n)
+            persist=self._persist).where(F.col("add_pos") <= limit_n)
         adding = self._persist(adding)
         add_host = url_host(F.col("cand_url"))
         new_entries = (
@@ -409,35 +426,25 @@ class CrawlEngine:
         # queue positions live in [0, max_pos + limit_n] — known driver
         # scalars, so the global rank skips the RangePartitioner's
         # boundary-sampling job (ranked.global_row_number bounds path).
-        # lazy_offsets: the admission rank above and this rank used to cost
-        # one blocking bucket-count job EACH per round; with the prefix sum
-        # expressed as a broadcast-joined 64-row plan the lineage cut below
-        # is the sched chain's ONLY action, and n_selected rides on it as
-        # an Observation instead of falling out of a driver prefix sum.
+        # Both ranks express their prefix sums as broadcast-joined plans,
+        # so the lineage cut below is the sched chain's ONLY action, and
+        # n_selected rides on it as an Observation.
         sel = global_row_number(sel, ["queue_pos"], "gr",
                                 persist=self._persist,
-                                bounds=(0, max_pos + limit_n),
-                                lazy_offsets=True)
+                                bounds=(0, max_pos + limit_n))
         sel = sel.where(F.col("gr") <= cfg.fetch_cap)
         self._sub("sched.rank", t_grn)
         # lineage cut, not persist: `selected` feeds every downstream stage
         # (fetch, commit, trace); an uncached plan would compound through
-        # the round's self-joins.
-        t_cut = time.monotonic()
-        sel_obs = Observation()
-        selected = self._cut(sel.select(
-            "queue_pos", "url", "page_id", "host",
-            (F.col("gr") - 1).cast("long").alias("crawl_pos"),
-        ).observe(sel_obs, F.count(F.lit(1)).alias("n")))
-        self._sub("sched.cut", t_cut)
-        # r6 ADVICE (medium): on an Observation fallback recover the exact
-        # value from the eager checkpoint — a cheap scan of materialized
-        # blocks — instead of defaulting to 0, which would take the
+        # the round's self-joins. A spurious n_selected of 0 would take the
         # empty-round path while queue_delta still tombstones `selected`'s
-        # queue_pos rows (scheduled URLs silently dropped).
-        sel_n = _obs_get(sel_obs, {"n": None})["n"]
-        n_selected = int(sel_n) if sel_n is not None else selected.count()
-        self._last_round_big = n_selected >= cfg.gc_big_round_urls
+        # queue_pos rows.
+        t_cut = time.monotonic()
+        selected, n_selected = self._cut_count(sel.select(
+            "queue_pos", "url", "page_id", "host",
+            (F.col("gr") - 1).cast("long").alias("crawl_pos")))
+        self._sub("sched.cut", t_cut)
+        self._last_round_big = n_selected >= self.GC_BIG_ROUND_URLS
         # queue merge delta (O(batch)): tombstones for the scheduled rows,
         # upserts for the new entries minus those scheduled this same round.
         # The Observation maintains the driver-side queue length / max
@@ -517,11 +524,11 @@ class CrawlEngine:
         # batch, and the asynchronous ContextCleaner competes with the
         # *next* round's jobs for cores (observed as a 60-80 s spike
         # spread nonspecifically across that round's stages in the r4
-        # scaling legs). A round that admitted >= gc_big_round_urls
+        # scaling legs). A round that admitted >= GC_BIG_ROUND_URLS
         # therefore collects every round — litter stays small and the
         # cleanup cost is spread evenly — while small-round runs keep the
         # cheap periodic cadence.
-        if (self.store.round % self.cfg.gc_every_rounds == 0
+        if (self.store.round % self.GC_EVERY_ROUNDS == 0
                 or self._last_round_big):
             try:
                 self.spark.sparkContext._jvm.System.gc()
@@ -581,16 +588,20 @@ class CrawlEngine:
         """Fetch+extract the selected URLs. Returns (fetched_pages DF,
         error rows DF, kept-buttons DF)."""
         cfg = self.cfg
-        corp1 = self.corpus.select(
-            F.col("url").alias("c_url1"), F.col("status").alias("status1"),
-            F.col("content_type").alias("ct1"),
-            F.col("redirect_to").alias("rt1"),
-            F.col("body_len").alias("bl1"), F.col("spans").alias("spans1"))
-        corp2 = self.corpus.select(
-            F.col("url").alias("c_url2"), F.col("status").alias("status2"),
-            F.col("content_type").alias("ct2"),
-            F.col("redirect_to").alias("rt2"),
-            F.col("body_len").alias("bl2"), F.col("spans").alias("spans2"))
+        def _corp(i):
+            # the corpus columns suffixed with the fetch hop (1 or 2)
+            return self.corpus.select(*[F.col(c).alias(f"{a}{i}") for c, a in (
+                ("url", "c_url"), ("status", "status"),
+                ("content_type", "ct"), ("redirect_to", "rt"),
+                ("body_len", "bl"), ("spans", "spans"))])
+
+        def _hop(i):
+            # one hop's columns under their unsuffixed names
+            return [F.col(f"c_url{i}").isNotNull().alias("found"),
+                    *[F.col(f"{a}{i}").alias(a)
+                      for a in ("status", "ct", "rt", "bl", "spans")]]
+
+        corp1, corp2 = _corp(1), _corp(2)
 
         f1 = self._persist(
             selected.join(corp1, selected["url"] == corp1["c_url1"], "left")
@@ -605,20 +616,10 @@ class CrawlEngine:
             "queue_pos", "url", "page_id", "host", "crawl_pos",
             F.coalesce("p6", "url").alias("res_url"),
         ]
-        no_p6 = f1.where(F.col("p6").isNull()).select(
-            *base_cols,
-            F.col("c_url1").isNotNull().alias("found"),
-            F.col("status1").alias("status"), F.col("ct1").alias("ct"),
-            F.col("rt1").alias("rt"), F.col("bl1").alias("bl"),
-            F.col("spans1").alias("spans"))
+        no_p6 = f1.where(F.col("p6").isNull()).select(*base_cols, *_hop(1))
         with_p6 = (f1.where(F.col("p6").isNotNull())
                    .join(corp2, F.col("p6") == corp2["c_url2"], "left")
-                   .select(*base_cols,
-                           F.col("c_url2").isNotNull().alias("found"),
-                           F.col("status2").alias("status"),
-                           F.col("ct2").alias("ct"), F.col("rt2").alias("rt"),
-                           F.col("bl2").alias("bl"),
-                           F.col("spans2").alias("spans")))
+                   .select(*base_cols, *_hop(2)))
         f2 = no_p6.unionByName(with_p6)
         f2 = f2.withColumn(
             "redirect_target",
@@ -763,13 +764,10 @@ class CrawlEngine:
         # the three link classes, fetched_src_ids and the trace — a cached
         # but uncut plan re-embeds the whole fetch/extract subtree at every
         # reference (the round-1 120 MB plan strings). _cut unpersists the
-        # blocks at round end. The fetched count rides an Observation on the
-        # same eager materialization — no separate count job.
+        # blocks at round end. A spurious fetched_n of 0 would leave
+        # _edges_maybe_nonempty False and stall the next round's ranking.
         t_pages = time.monotonic()
-        f_obs = Observation()
-        fetched = self._cut(fetched.observe(
-            f_obs, F.count(F.lit(1)).alias("n")))
-        fetched_n = int(_obs_get(f_obs, {"n": 0})["n"])
+        fetched, fetched_n = self._cut_count(fetched)
         self._sub("fetch.pages", t_pages)
         # errors is a cheap filter over the persisted f2 — no extra cache
         return fetched, errors, btns, media_new, fetched_n
@@ -908,27 +906,20 @@ class CrawlEngine:
         seen_first = (new_pids.withColumn("rn", F.row_number().over(w_first))
                       .where(F.col("rn") == 1))
         t_nodeid = time.monotonic()
-        # lazy offsets + an Observation on the checkpoint: node-id
-        # assignment costs exactly ONE action (the cut) instead of the r6
-        # blocking bucket-count job followed by a separate checkpoint job.
-        # The r6 n_new==0 fast path skipped the cut; the single action on
-        # an empty relation costs about what the old count job did, and
-        # growth rounds save a whole job submission.
+        # the offsets plan + the counted cut: node-id assignment costs
+        # exactly ONE action (the cut) instead of the r6 blocking
+        # bucket-count job followed by a separate checkpoint job. The r6
+        # n_new==0 fast path skipped the cut; the single action on an empty
+        # relation costs about what the old count job did, and growth
+        # rounds save a whole job submission.
         ranked_new = global_row_number(
             seen_first, ["crawl_pos", "link_class", "link_ord"],
-            "assign_rn", persist=self._persist, lazy_offsets=True)
-        sn_obs = Observation()
-        seen_new = self._cut(
+            "assign_rn", persist=self._persist)
+        seen_new, n_new = self._cut_count(
             ranked_new
             .withColumn("node_id", F.lit(max_id) + F.col("assign_rn"))
             .select("page_id", "node_id",
-                    F.lit(r).alias("first_seen_round"))
-            .observe(sn_obs, F.count(F.lit(1)).alias("n"))
-        )
-        # fallback recovery mirrors sel_obs: never assume 0 — a spurious 0
-        # would drop this round's seen delta (node ids lost for good)
-        sn_n = _obs_get(sn_obs, {"n": None})["n"]
-        n_new = int(sn_n) if sn_n is not None else seen_new.count()
+                    F.lit(r).alias("first_seen_round")))
         self._sub("plan.nodeid", t_nodeid)
         if n_new == 0:
             # recrawl-heavy steady state: no new pages most rounds — skip

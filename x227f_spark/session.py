@@ -45,7 +45,7 @@ def get_spark(cores: int | None = None, app_name: str = "x227f_spark",
         .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
                 "true")
         .config("spark.sql.session.timeZone", "UTC")
-        # the scheduler's lazy prefix-sum offsets (ranked.lazy_offsets)
+        # global_row_number's prefix-sum offsets (operators/ranked.py)
         # materialize a data-scale aggregation inside a broadcast
         # exchange; at 10^10-frontier round sizes the default 300 s
         # deadline would turn a slow counts job into a hard timeout
@@ -72,8 +72,7 @@ def get_spark(cores: int | None = None, app_name: str = "x227f_spark",
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    if os.environ.get("X227F_PREWARM", "1") != "0":
-        _prewarm(spark, cores)
+    _prewarm(spark, cores)
     return spark
 
 
@@ -92,8 +91,7 @@ def _prewarm(spark: SparkSession, cores: int) -> None:
     absorbed the cost instead (measured r7: mm_decode_features 3.18 s
     cold vs 0.32 s warm ≈ worker spin-up; g2_pagerank 6.4 s cold vs 1.7 s
     warm ≈ codegen/JIT). Touches no input data — everything derives from
-    ``spark.range`` — so no result can be precomputed here. Disable with
-    X227F_PREWARM=0."""
+    ``spark.range`` — so no result can be precomputed here."""
     app_id = spark.sparkContext.applicationId
     if app_id in _PREWARMED:
         return
