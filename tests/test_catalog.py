@@ -39,9 +39,10 @@ def test_late_append_commits_atomically(spark, tmp_path):
 
     store.commit(1, {"cow_t": base}, {}, late_append=late)
     assert store.read("metrics").collect()[0]["n"] == 42
-    with open(os.path.join(str(tmp_path / "st2"), "CHECKPOINT")) as f:
+    with open(os.path.join(str(tmp_path / "st2"), "checkpoints",
+                           "r000001.json")) as f:
         ck = json.load(f)
-    assert "metrics" in ck["append"]  # same atomic pointer flip
+    assert "metrics" in ck["append"]  # same atomic checkpoint publish
 
 
 def test_mixed_mode_checkpoint_fails_loudly(spark, tmp_path):
@@ -49,10 +50,11 @@ def test_mixed_mode_checkpoint_fails_loudly(spark, tmp_path):
     store = StateStore(spark, root)
     df = spark.createDataFrame([("a", 1)], "page_id string, n int")
     store.commit(1, {"pages": df})
-    with open(os.path.join(root, "CHECKPOINT")) as f:
+    ck_path = os.path.join(root, "checkpoints", "r000001.json")
+    with open(ck_path) as f:
         ck = json.load(f)
     ck["merge"]["pages"] = {"base": None, "deltas": [], "keys": ["page_id"]}
-    with open(os.path.join(root, "CHECKPOINT"), "w") as f:
+    with open(ck_path, "w") as f:
         json.dump(ck, f)
     with pytest.raises(ValueError, match="both cow and merge"):
         StateStore(spark, root)
@@ -77,7 +79,7 @@ def test_table_commits_in_one_mode_only(spark, tmp_path):
         store.commit(2, {"t": df(2)})
     with pytest.raises(ValueError, match="in append mode"):
         store.commit(2, {}, merge={"t": MergeDelta(df(2), ["key"])})
-    # a late append is staged after the main writes, still before the flip
+    # a late append is staged after the main writes, still before publish
     with pytest.raises(ValueError, match="in merge mode"):
         store.commit(2, {}, late_append=lambda: {"u": df(2)},
                      merge={"u": MergeDelta(df(2), ["key"])})
@@ -100,11 +102,9 @@ def test_checkpoint_keys_after_compaction_and_fold(spark, tmp_path,
         store.commit(r, {"c": rows}, {"a": rows},
                      stats={"n": r},
                      merge={"m": MergeDelta(rows, ["key"])})
-    with open(os.path.join(root, "CHECKPOINT")) as f:
-        ck = json.load(f)
     with open(os.path.join(root, "checkpoints",
                            f"r{StateStore.COMPACT_AT:06d}.json")) as f:
-        assert json.load(f) == ck
+        ck = json.load(f)
     assert list(ck) == ["round", "cow", "append", "merge", "stats"]
     assert ck["round"] == StateStore.COMPACT_AT
     assert ck["stats"] == {"n": StateStore.COMPACT_AT}
@@ -113,11 +113,11 @@ def test_checkpoint_keys_after_compaction_and_fold(spark, tmp_path,
     assert len(ck["append"]["a"]) == 1
     ent = ck["merge"]["m"]
     assert sorted(ent) == ["base", "base_bytes", "delta_bytes", "deltas",
-                           "keys", "last_bytes"]
+                           "keys"]
     # ...and folded the merge table's delta into a new base
     assert isinstance(ent["base"], int) and ent["base_bytes"] > 0
     assert ent["deltas"] == [] and ent["delta_bytes"] == []
-    assert ent["keys"] == ["key"] and ent["last_bytes"] > 0
+    assert ent["keys"] == ["key"]
     rows = {(x["round"], x["key"]) for x in store.read("m").collect()}
     assert rows == {(r, f"k{r}") for r in range(1, StateStore.COMPACT_AT + 1)}
     assert StateStore(spark, root).read("a").count() == StateStore.COMPACT_AT

@@ -3,9 +3,17 @@
 - resume: kill after round k (drop the engine object), build a fresh engine
   on the same state dir, finish the crawl → identical final state vs an
   uninterrupted run.
+- kill matrix: kill round 1 mid-commit (after the staged writes, during the
+  folds, at the publish, before the cleanup) → the reopened store holds
+  exactly the version dirs its live checkpoint references, and the finished
+  crawl equals the uninterrupted one.
 - invariance: the same crawl at different shuffle-partition counts produces
   byte-identical ordering/state (SURVEY.md §4 determinism discipline).
 """
+
+import glob
+import json
+import os
 
 import pytest
 
@@ -39,6 +47,96 @@ def test_resume_mid_crawl(spark, corpus_dir, cfg, tmp_path_factory, baseline):
     assert eng2.trace_events() == baseline.trace_events()
     assert eng2.seen_set() == baseline.seen_set()
     assert eng2.page_spans() == baseline.page_spans()
+
+
+class Kill(Exception):
+    """Stands in for the process dying at a commit boundary."""
+
+
+def _kill_after_staged(store):
+    real = store._write_all
+
+    def write_all(jobs, workers):
+        real(jobs, workers)  # the round's first write call: staged tables
+        raise Kill
+    return "_write_all", write_all
+
+
+def _kill_mid_fold(store):
+    real = store._write_all
+
+    def write_all(jobs, workers):
+        if all(hint is None for *_, hint in jobs):
+            return real(jobs, workers)  # staged / late writes
+        real(jobs[:1], workers)  # fold jobs carry a bytes hint
+        raise Kill
+    return "_write_all", write_all
+
+
+def _kill_at(method):
+    def fault(store):
+        def die(*_args):
+            raise Kill
+        return method, die
+    return fault
+
+
+def _version_dirs(root):
+    """(version dirs on disk, version dirs the live checkpoint references)
+    as sets of (table, version)."""
+    with open(sorted(glob.glob(os.path.join(root, "checkpoints",
+                                            "r*.json")))[-1]) as f:
+        ck = json.load(f)
+    live = {(t, v) for t, v in ck["cow"].items()}
+    live |= {(t, v) for t, vs in ck["append"].items() for v in vs}
+    live |= {(t, v) for t, ent in ck["merge"].items()
+             for v in ([ent["base"]] if ent["base"] is not None else [])
+             + ent["deltas"]}
+    tables = os.path.join(root, "tables")
+    disk = {(t, int(d[1:])) for t in os.listdir(tables)
+            for d in os.listdir(os.path.join(tables, t)) if d.startswith("v")}
+    return disk, live
+
+
+@pytest.mark.parametrize("fault, resumed_at", [
+    (_kill_after_staged, 0), (_kill_mid_fold, 0),
+    (_kill_at("_publish"), 0), (_kill_at("_collect"), 1),
+], ids=["staged", "fold", "publish", "collect"])
+def test_kill_mid_commit_resumes(spark, corpus_dir, cfg, tmp_path_factory,
+                                 baseline, monkeypatch, fault, resumed_at):
+    state = str(tmp_path_factory.mktemp("kill"))
+    eng1 = CrawlEngine(spark, corpus_dir, state, config=cfg)
+    eng1._bootstrap()
+    monkeypatch.setattr(eng1.store, *fault(eng1.store))
+    with pytest.raises(Kill):
+        eng1.run_round()
+    eng1._drop_round_persists()
+    del eng1
+    disk, live = _version_dirs(state)
+    assert disk > live  # the kill left unreferenced version dirs behind
+    eng2 = CrawlEngine(spark, corpus_dir, state, config=cfg)
+    assert eng2.store.round == resumed_at
+    disk, live = _version_dirs(state)
+    assert disk == live
+    eng2.run(ROUNDS - resumed_at)
+    assert eng2.trace_events() == baseline.trace_events()
+    assert eng2.seen_set() == baseline.seen_set()
+    assert eng2.page_spans() == baseline.page_spans()
+
+
+def test_torn_publish_leftover_ignored(spark, corpus_dir, cfg,
+                                       tmp_path_factory):
+    """A garbage ``.tmp`` checkpoint (a publish killed before its rename)
+    is never read, and the round's next publish replaces it."""
+    state = str(tmp_path_factory.mktemp("torn"))
+    CrawlEngine(spark, corpus_dir, state, config=cfg)._bootstrap()
+    tmp = os.path.join(state, "checkpoints", "r000001.json.tmp")
+    with open(tmp, "w") as f:
+        f.write('{"round": 1, "cow": {')
+    eng = CrawlEngine(spark, corpus_dir, state, config=cfg)
+    assert eng.store.round == 0
+    eng.run_round()
+    assert eng.store.round == 1 and not os.path.exists(tmp)
 
 
 def test_partition_invariance(spark, corpus_dir, cfg, tmp_path_factory,

@@ -53,7 +53,7 @@ now = datetime.fromisoformat("2026-01-01T00:01:00+00:00")
 times = []
 for i in range(reps):
     t0 = time.monotonic()
-    fetched, errors, btns, media_new, fetched_n = eng._fetch(sel, cache, now)
+    fetched, errors, btns, media_new, fetched_n = eng._fetch(sel, cache, now, n)
     n_pages = fetched_n; n_btns = btns.count()
     times.append(round(time.monotonic() - t0, 2))
     eng._drop_round_persists()

@@ -4,8 +4,8 @@ semantics are expressible JVM-side (those stay in whole-stage codegen and
 are preferred in the hot path).
 
 Operator ids per SURVEY.md §2: U1 (PageId), U2 (page-URL cleanup), U5
-(join), U6 (source_filename), U7 (host shortening), U8 (sha256-trunc32),
-F1 (host suffix filter), F7 (host charset).
+(join), U6 (source_filename), U8 (sha256-trunc32), F1 (host suffix
+filter).
 """
 
 from __future__ import annotations
@@ -14,9 +14,7 @@ import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import (
-    StringType, StructType, StructField,
-)
+from pyspark.sql.types import StringType
 
 from ..urlutil import (
     Url,
@@ -33,32 +31,6 @@ from ..urlutil import (
 def page_id_udf(urls: pd.Series) -> pd.Series:
     """url → PageId display string (data.rs:534-552 + 510-520)."""
     return urls.map(lambda u: page_id_of(u) if u is not None else None)
-
-
-@pandas_udf(StructType([StructField("host", StringType()),
-                        StructField("path", StringType())]))
-def page_id_struct_udf(urls: pd.Series) -> pd.DataFrame:
-    from ..urlutil import page_id_from_url
-
-    parts = urls.map(lambda u: page_id_from_url(u) if u is not None else ("", ""))
-    return pd.DataFrame({"host": parts.map(lambda t: t[0]),
-                         "path": parts.map(lambda t: t[1])})
-
-
-def page_id_cols(url: Column) -> Column:
-    """Pure-Column U1 for *pre-canonicalized* http(s) URLs (no ports, no
-    query/fragment in the path, lowercase host) — the shape our corpus and
-    state tables hold. Whole-stage-codegen friendly; the pandas UDF above is
-    the general form. Returns the PageId display string."""
-    rest = F.regexp_replace(url, r"^[a-z][a-z0-9+.-]*://", "")
-    host = F.regexp_extract(rest, r"^([^/]*)", 1)
-    path = F.regexp_replace(rest, r"^[^/]*", "")
-    host = F.regexp_replace(host, r"^(www\.)+", "")
-    host = F.regexp_replace(host, r":\d+$", "")
-    path = F.regexp_replace(path, r"^/+", "")
-    path = F.regexp_replace(path, r"(/index\.html)+$", "")
-    path = F.regexp_replace(path, r"/+$", "")
-    return F.when(path == "", host).otherwise(F.concat_ws("/", host, path))
 
 
 def url_host(url: Column) -> Column:
@@ -118,16 +90,6 @@ def source_filename_col(path: Column) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# U7 — host shortening (pure Column, one step)
-# ---------------------------------------------------------------------------
-
-def shorten_host_col(host: Column) -> Column:
-    parts = F.split(host, r"\.")
-    return F.when(F.size(parts) > 2,
-                  F.array_join(F.slice(parts, 2, F.size(parts) - 1), "."))
-
-
-# ---------------------------------------------------------------------------
 # U8 — content hash (pure Column, exact)
 # ---------------------------------------------------------------------------
 
@@ -148,10 +110,3 @@ def hosts_list_contains_col(host: Column, hosts: tuple[str, ...]) -> Column:
         cond = cond | (host == d) | host.endswith("." + d)
     return cond
 
-
-# ---------------------------------------------------------------------------
-# F7 — host charset gate (pure Column)
-# ---------------------------------------------------------------------------
-
-def host_is_valid_col(host: Column) -> Column:
-    return host.rlike("^[a-zA-Z0-9.-]+$")

@@ -47,13 +47,6 @@ from ..urlutil import (
     transform_image_url_bypass,
 )
 
-BUTTON_STRUCT = ("ord int, source string, hash string, file_ext string, "
-                 "target string, last_visited timestamp, redirect_from string, "
-                 "redirect_last_visited timestamp, alt string, title string")
-
-_SPAN_TUPLES = "array<struct<kind:string,text:string,media_ref:string,offset:int>>"
-
-
 # ---------------------------------------------------------------------------
 # Corpus-level precomputation: 3-hop image redirect resolution (image.rs:296-318)
 # ---------------------------------------------------------------------------

@@ -44,6 +44,16 @@ def _split_pid(col):
     return host, path
 
 
+def _ordered(value):
+    """Aggregate: ``value`` collected per group in the canonical cross-page
+    occurrence order (source host, path, ord)."""
+    return F.transform(
+        F.array_sort(F.collect_list(F.struct(
+            F.struct("s_host", "s_path", "ord").alias("k"),
+            value.alias("v")))),
+        lambda s: s["v"])
+
+
 def _http_scheme(col):
     return col.startswith("http://") | col.startswith("https://")
 
@@ -158,27 +168,13 @@ def build_processed(spark: SparkSession, pages: DataFrame) -> dict[str, DataFram
                  "filename", "left")
            .localCheckpoint(eager=True))
 
-    ordk = F.struct("s_host", "s_path", "ord")
-
-    def collect_ordered(df, group, value, name, extra_order=None):
-        key = F.struct("s_host", "s_path", "ord") if extra_order is None \
-            else extra_order
-        return (df.groupBy(group)
-                .agg(F.transform(
-                    F.array_sort(F.collect_list(F.struct(key.alias("k"),
-                                                         value.alias("v")))),
-                    lambda s: s["v"]).alias(name)))
-
     # ---- per-source-page vectors (links, link_buttons, link_button_*) ----
-    page_vecs = (occ.groupBy("src_idx").agg(
-        F.transform(F.array_sort(F.collect_list(F.struct(
-            ordk.alias("k"),
-            F.struct(F.col("tgt_idx").alias("link"),
-                     F.col("button_idx").alias("btn"),
-                     F.col("alt_idx").alias("alt"),
-                     F.col("title_idx").alias("title"),
-                     F.col("filename_idx").alias("fname")).alias("v")))),
-            lambda s: s["v"]).alias("vs"))
+    page_vecs = (occ.groupBy("src_idx").agg(_ordered(
+        F.struct(F.col("tgt_idx").alias("link"),
+                 F.col("button_idx").alias("btn"),
+                 F.col("alt_idx").alias("alt"),
+                 F.col("title_idx").alias("title"),
+                 F.col("filename_idx").alias("fname"))).alias("vs"))
         .select(F.col("src_idx").alias("page_idx"),
                 F.transform("vs", lambda v: v["link"]).alias("links"),
                 F.transform("vs", lambda v: v["btn"]).alias("link_buttons"),
@@ -188,12 +184,9 @@ def build_processed(spark: SparkSession, pages: DataFrame) -> dict[str, DataFram
 
     # ---- per-target vectors (backlinks, backlink_buttons) -----------------
     linked = occ.where(F.col("tgt_idx").isNotNull())
-    back_vecs = (linked.groupBy("tgt_idx").agg(
-        F.transform(F.array_sort(F.collect_list(F.struct(
-            ordk.alias("k"),
-            F.struct(F.col("src_idx").alias("src"),
-                     F.col("button_idx").alias("btn")).alias("v")))),
-            lambda s: s["v"]).alias("vs"))
+    back_vecs = (linked.groupBy("tgt_idx").agg(_ordered(
+        F.struct(F.col("src_idx").alias("src"),
+                 F.col("button_idx").alias("btn"))).alias("vs"))
         .select(F.col("tgt_idx").alias("page_idx"),
                 F.transform("vs", lambda v: v["src"]).alias("backlinks"),
                 F.transform("vs", lambda v: v["btn"]).alias("backlink_buttons")))
@@ -201,23 +194,13 @@ def build_processed(spark: SparkSession, pages: DataFrame) -> dict[str, DataFram
     # ---- per-button vectors (names, links, backlinks) ----------------------
     # names: alt, title, filename per occurrence in canonical order
     # (processed.rs:183-191); links only for targeted occurrences
-    names = (occ.select("button_idx", "s_host", "s_path", "ord",
-                        F.array("alt_idx", "title_idx", "filename_idx")
-                        .alias("n3"))
-             .groupBy("button_idx").agg(
-        F.flatten(F.transform(
-            F.array_sort(F.collect_list(F.struct(ordk.alias("k"),
-                                                 F.col("n3").alias("v")))),
-            lambda s: F.filter(s["v"], lambda x: x.isNotNull())))
-        .alias("names")))
-    b_links = (linked.groupBy("button_idx").agg(
-        F.transform(F.array_sort(F.collect_list(F.struct(
-            ordk.alias("k"), F.col("tgt_idx").alias("v")))),
-            lambda s: s["v"]).alias("links")))
-    b_backlinks = (occ.groupBy("button_idx").agg(
-        F.transform(F.array_sort(F.collect_list(F.struct(
-            ordk.alias("k"), F.col("src_idx").alias("v")))),
-            lambda s: s["v"]).alias("backlinks")))
+    names = occ.groupBy("button_idx").agg(F.flatten(F.transform(
+        _ordered(F.array("alt_idx", "title_idx", "filename_idx")),
+        lambda v: F.filter(v, lambda x: x.isNotNull()))).alias("names"))
+    b_links = linked.groupBy("button_idx").agg(
+        _ordered(F.col("tgt_idx")).alias("links"))
+    b_backlinks = occ.groupBy("button_idx").agg(
+        _ordered(F.col("src_idx")).alias("backlinks"))
     button_vecs = (dict_buttons
                    .join(names, "button_idx", "left")
                    .join(b_links, "button_idx", "left")

@@ -67,9 +67,6 @@ SCHEMAS = {
                 "queue_size long, seen_size long, duration_ms long"),
 }
 
-APPEND_TABLES = {"seen", "trace", "metrics", "media"}
-
-
 import logging
 
 _log = logging.getLogger(__name__)
@@ -796,46 +793,42 @@ class CrawlEngine:
         merges["button_cache"] = MergeDelta(new_cache, ["url"])
 
         # ---- pages merge (data.rs:298-326 + main.rs:271-287) ----------------
-        page_new = fetched.select(
-            "page_id", F.col("res_url").alias("url"),
-            F.lit(now).alias("last_visited"), F.lit(0).alias("failed"),
-            "redirects_to", "internal_links", "buttons")
-        err_new = errors.select("page_id", "url")
-        old = pages.alias("old")
-        upd = (old.join(page_new.alias("new"), "page_id")
-               .select("page_id", F.col("new.url").alias("url"),
-                       F.col("new.last_visited").alias("last_visited"),
-                       F.col("new.failed").alias("failed"),
-                       # QUIRK: redirects_to not updated for existing pages
-                       # (data.rs:317-322)
-                       F.col("old.redirects_to").alias("redirects_to"),
-                       F.col("new.internal_links").alias("internal_links"),
-                       F.col("new.buttons").alias("buttons")))
-        ins = page_new.join(pages.select("page_id"), "page_id", "left_anti")
-        upd_err = (old.join(err_new.select("page_id").alias("e"), "page_id")
-                   .select("page_id", "old.url",
-                           F.lit(now).alias("last_visited"),
-                           (F.col("old.failed") + 1).alias("failed"),
-                           "old.redirects_to", "old.internal_links",
-                           "old.buttons"))
-        ins_err = (err_new.join(pages.select("page_id"), "page_id", "left_anti")
-                   .select("page_id", "url", F.lit(now).alias("last_visited"),
-                           F.lit(1).alias("failed"),
-                           F.lit(None).cast("string").alias("redirects_to"),
-                           F.array().cast("array<string>").alias("internal_links"),
-                           F.array().cast(
-                               "array<struct<ord:int,source:string,hash:string,"
-                               "file_ext:string,target:string,"
-                               "last_visited:timestamp,alt:string,title:string>>"
-                           ).alias("buttons")))
-        touched = page_new.select("page_id").unionByName(
-            err_new.select("page_id"))
-        # pages merge delta: the four upsert arms only (update/insert for
-        # fetched and failed pages); untouched pages are never rewritten.
-        # `upd`/`upd_err` inner-join `pages` on the batch's keys — a
-        # broadcast probe of the base scan, not a shuffle of it.
+        # one union of the round's fetched and failed rows, left-joined once
+        # to `pages`: a fetched page takes its new row; a failed page keeps
+        # its old url/links/buttons and counts one more failure, or gets an
+        # empty stub row when it is new. Untouched pages are never
+        # rewritten.
+        batch = fetched.select(
+            "page_id", F.col("res_url").alias("url"), "redirects_to",
+            "internal_links", "buttons", F.lit(True).alias("ok")
+        ).unionByName(errors.select(
+            "page_id", "url", F.lit(None).cast("string").alias("redirects_to"),
+            F.array().cast("array<string>").alias("internal_links"),
+            F.array().cast(
+                "array<struct<ord:int,source:string,hash:string,"
+                "file_ext:string,target:string,last_visited:timestamp,"
+                "alt:string,title:string>>").alias("buttons"),
+            F.lit(False).alias("ok")))
+        old = pages.select("page_id", F.lit(True).alias("hit"), *[
+            F.col(c).alias(f"old_{c}") for c in (
+                "url", "failed", "redirects_to", "internal_links", "buttons")])
+        hit = F.col("hit").isNotNull()
+
+        def own_or_old(c):
+            return F.when(F.col("ok") | ~hit, F.col(c)) \
+                    .otherwise(F.col(f"old_{c}")).alias(c)
+
+        touched = batch.select("page_id")
         merges["pages"] = MergeDelta(
-            upd.unionByName(ins).unionByName(upd_err).unionByName(ins_err),
+            batch.join(old, "page_id", "left").select(
+                "page_id", own_or_old("url"), F.lit(now).alias("last_visited"),
+                F.when(F.col("ok"), 0).when(hit, F.col("old_failed") + 1)
+                .otherwise(1).alias("failed"),
+                # QUIRK: redirects_to not updated for existing pages
+                # (data.rs:317-322)
+                F.when(hit, F.col("old_redirects_to"))
+                .otherwise(F.col("redirects_to")).alias("redirects_to"),
+                own_or_old("internal_links"), own_or_old("buttons")),
             ["page_id"])
 
         # ---- E4: link derivation (data.rs:354-416) --------------------------

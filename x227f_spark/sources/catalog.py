@@ -47,12 +47,18 @@ Layout::
 
     <root>/tables/<table>/v{N:06d}/   parquet data (full version or delta)
     <root>/checkpoints/r{R:06d}.json  committed table→version map of round R
-    <root>/CHECKPOINT                 atomic pointer (tmp+rename) to latest
 
-A round writes new version directories (crash-safe: nothing references them
-until commit), then renames the checkpoint json over ``CHECKPOINT``. A
-killed half-committed round re-runs idempotently — the deterministic round
-recomputes the identical result from the previous checkpoint.
+The live checkpoint is the newest ``checkpoints/r*.json``. A round writes
+new version directories (nothing references them yet), then publishes its
+checkpoint: ``r{R}.json.tmp`` is written, fsynced and renamed to
+``r{R}.json``. That rename is the commit point; a ``.tmp`` leftover of a
+killed publish is never read and the round's next publish overwrites it.
+After every publish and on every open, each version dir the live
+checkpoint does not reference is deleted — the one retention rule, so a
+round killed anywhere (mid-write, mid-fold, between publish and cleanup)
+leaves no orphan behind. The killed round re-runs idempotently: the
+deterministic round recomputes the identical result from the previous
+checkpoint.
 """
 
 from __future__ import annotations
@@ -91,12 +97,11 @@ def _dir_bytes(path: str) -> int:
 def _merge_entry(ent: dict, **changes) -> dict:
     """Copy of a merge table's checkpoint entry, with ``changes`` applied:
     ``{"base": int|None, "deltas": [int...], "keys": [col...],
-    "base_bytes": int, "delta_bytes": [int...], "last_bytes": int}``."""
+    "base_bytes": int, "delta_bytes": [int...]}``."""
     out = {"base": ent.get("base"), "deltas": list(ent.get("deltas", [])),
            "keys": list(ent["keys"]),
            "base_bytes": int(ent.get("base_bytes", 0)),
-           "delta_bytes": list(ent.get("delta_bytes", [])),
-           "last_bytes": int(ent.get("last_bytes", 0))}
+           "delta_bytes": list(ent.get("delta_bytes", []))}
     out.update(changes)
     return out
 
@@ -157,17 +162,21 @@ class StateStore:
         self._last_write_bytes: dict[str, int] = {}
         self.last_timing: dict = {}  # per-phase seconds of the last commit
         self._load_checkpoint()
+        self._collect()  # orphans of a round killed before its publish
 
     # -- checkpoint handling ----------------------------------------------
-    def _ptr_path(self) -> str:
-        return os.path.join(self.root, "CHECKPOINT")
+    def _ck_path(self, round_no: int) -> str:
+        return os.path.join(self.root, "checkpoints", f"r{round_no:06d}.json")
 
     def _load_checkpoint(self) -> None:
-        try:
-            with open(self._ptr_path()) as f:
+        """Load the live checkpoint, the newest ``checkpoints/r*.json``."""
+        done = [int(n[1:-len(".json")])
+                for n in os.listdir(os.path.join(self.root, "checkpoints"))
+                if n.startswith("r") and n.endswith(".json")]
+        ck = {"round": 0, "cow": {}, "append": {}, "merge": {}}
+        if done:
+            with open(self._ck_path(max(done))) as f:
                 ck = json.load(f)
-        except FileNotFoundError:
-            ck = {"round": 0, "cow": {}, "append": {}, "merge": {}}
         # mode -> table map, in checkpoint JSON order: cow {name: v},
         # append {name: [v...]}, merge {name: _merge_entry}
         self._tables = {
@@ -269,11 +278,12 @@ class StateStore:
         tables are written as new version dirs (submitted concurrently —
         Spark schedules them side by side, the snapshot-store analogue of
         Iceberg's parallel manifest writes); tables past their fold
-        condition are rewritten as one version; the checkpoint pointer
-        flips atomically; superseded version dirs are removed.
+        condition are rewritten as one version; the round's checkpoint is
+        published (``_publish``, the commit point); version dirs it does
+        not reference are removed (``_collect``).
 
         ``late_append``: optional ``() -> dict[name, DataFrame]`` invoked
-        after the main writes finish but before the pointer flips — lets the
+        after the main writes finish but before the publish — lets the
         caller derive tables (metrics) from Observations attached to the
         staged writes, so counting piggybacks on the write jobs instead of
         costing separate actions. ``stats`` may likewise be a callable,
@@ -320,7 +330,6 @@ class StateStore:
                 self._last_write_bytes[name] = b
                 if name in new["merge"]:
                     new["merge"][name]["delta_bytes"].append(b)
-                    new["merge"][name]["last_bytes"] = b
 
         # -- stage + write ---------------------------------------------------
         jobs = (stage("cow", overwrite) + stage("append", append or {})
@@ -377,11 +386,8 @@ class StateStore:
                                for x in old)
                     folds.append((name, max(old) + 1,
                                   partial(self._view, name, new), hint))
-        doomed: list[str] = []
         for (name, v, _df, _h), b in zip(folds,
                                          self._write_all(folds, workers)):
-            doomed += [self._table_path(name, x)
-                       for x in _versions(new, name)]
             if name in new["append"]:
                 new["append"][name] = [v]
             else:
@@ -396,22 +402,44 @@ class StateStore:
         # length, seen count) into the same atomic checkpoint
         ck_stats = (stats() if callable(stats) else stats) \
             if stats is not None else self.stats
-        ck = {"round": round_no, **new, "stats": ck_stats}
-        ck_path = os.path.join(self.root, "checkpoints", f"r{round_no:06d}.json")
-        with open(ck_path, "w") as f:
-            json.dump(ck, f)
-        tmp = self._ptr_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(ck, f)
-        os.replace(tmp, self._ptr_path())  # the atomic commit point
-
-        # -- collect ---------------------------------------------------------
-        self._gc_old_versions(new["cow"])
-        for path in doomed:  # superseded by the folded version
-            shutil.rmtree(path, ignore_errors=True)
+        self._publish({"round": round_no, **new, "stats": ck_stats})
         self._tables = new
         self.round = round_no
-        self.stats = ck["stats"]
+        self.stats = ck_stats
+
+        # -- collect ---------------------------------------------------------
+        self._collect()
+
+    def _publish(self, ck: dict) -> None:
+        """The commit point: write the round's checkpoint to a temp file,
+        fsync it, rename it into place and fsync the directory, so a kill
+        at any instant leaves either no record of the round or a whole
+        one."""
+        path = self._ck_path(ck["round"])
+        with open(path + ".tmp", "w") as f:
+            json.dump(ck, f)
+            f.flush()
+            os.fsync(f.fileno())
+        os.replace(path + ".tmp", path)
+        fd = os.open(os.path.dirname(path), os.O_RDONLY)
+        try:
+            os.fsync(fd)
+        finally:
+            os.close(fd)
+
+    def _collect(self) -> None:
+        """Delete every version dir the live checkpoint does not reference:
+        versions superseded by a cow write or a fold, and the writes of a
+        round killed before its publish. A dir that fails to delete stays
+        unreferenced, so the next collect retries it."""
+        tables = os.path.join(self.root, "tables")
+        for name in os.listdir(tables):
+            live = {self._table_path(name, v)
+                    for v in _versions(self._tables, name)}
+            for entry in os.listdir(os.path.join(tables, name)):
+                path = os.path.join(tables, name, entry)
+                if entry.startswith("v") and path not in live:
+                    shutil.rmtree(path, ignore_errors=True)
 
     def _fold_due(self, mode: str, ent) -> bool:
         """Whether a table's committed versions are rewritten as one.
@@ -558,21 +586,6 @@ class StateStore:
             return rows
         dkeys = alld.select(*keys).distinct()
         return base.join(dkeys, keys, "left_anti").unionByName(rows)
-
-    def _gc_old_versions(self, cow: dict[str, int], keep: int = 2) -> None:
-        for name, cur in cow.items():
-            tdir = os.path.join(self.root, "tables", name)
-            if not os.path.isdir(tdir):
-                continue
-            for entry in os.listdir(tdir):
-                if not entry.startswith("v"):
-                    continue
-                try:
-                    v = int(entry[1:])
-                except ValueError:
-                    continue
-                if v <= cur - keep:
-                    shutil.rmtree(os.path.join(tdir, entry), ignore_errors=True)
 
     # -- reads --------------------------------------------------------------
     def _table_path(self, name: str, version: int) -> str:
