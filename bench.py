@@ -7,9 +7,7 @@ throughput run on the synthetic corpus, and prints ONE JSON line::
     {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
 Extra keys: ``crawl`` (urls fetched+deduped/sec and round stats) and
-``cpus``. The N-vs-4N scaling protocol (BASELINE.md) is driven by
-``tools/bench_scaling.py``, which runs this file at two parallelism levels
-and writes BENCH/BASELINE.md.
+``cpus``.
 """
 
 from __future__ import annotations
@@ -41,15 +39,14 @@ HEADLINE = [
     "mm_decode_features",
 ]
 
-# crawl bench knobs (deterministic corpus; cached across runs)
-CRAWL_HOSTS = int(os.environ.get("BENCH_CRAWL_HOSTS", "400"))
-CRAWL_PAGES_PER_HOST = int(os.environ.get("BENCH_CRAWL_PPH", "8"))
-CRAWL_ROUNDS = int(os.environ.get("BENCH_CRAWL_ROUNDS", "4"))
-CRAWL_FETCH_CAP = int(os.environ.get("BENCH_CRAWL_CAP", "3000"))
-# seed-page fanout (how many host roots the seed links via buttons) — the
-# frontier ramp-up knob; big scaling runs link every host so steady-state
-# full-cap rounds start by round ~4 instead of ~7
-CRAWL_FANOUT = int(os.environ.get("BENCH_CRAWL_FANOUT", "100"))
+# crawl bench shape (deterministic corpus; cached across runs)
+CRAWL_HOSTS = 400
+CRAWL_PAGES_PER_HOST = 8
+CRAWL_ROUNDS = 4
+CRAWL_FETCH_CAP = 3000
+# seed-page fanout: how many host roots the seed links via buttons (the
+# frontier ramp-up)
+CRAWL_FANOUT = 100
 
 
 def bench_queries(spark, sf_dir: str) -> tuple[dict[str, float],

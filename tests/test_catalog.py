@@ -1,4 +1,5 @@
-"""StateStore: append-delta compaction and late-append commit semantics."""
+"""StateStore: append-delta compaction, late-append commit semantics and
+the O(batch) merge commit."""
 
 import json
 import os
@@ -121,6 +122,36 @@ def test_checkpoint_keys_after_compaction_and_fold(spark, tmp_path,
     rows = {(x["round"], x["key"]) for x in store.read("m").collect()}
     assert rows == {(r, f"k{r}") for r in range(1, StateStore.COMPACT_AT + 1)}
     assert StateStore(spark, root).read("a").count() == StateStore.COMPACT_AT
+
+
+def test_merge_commit_writes_o_batch(spark, tmp_path):
+    """A merge commit writes only the batch: the same B-row delta (updates,
+    inserts and tombstones) committed over S and over 2S rows of state
+    records the same delta bytes, far below the base it stacks on."""
+    def rows(ids):
+        return ids.selectExpr("concat('k', id) as key", "id as v",
+                              "sha2(cast(id as string), 256) as pad")
+
+    def delta_and_base_bytes(n_state):
+        root = str(tmp_path / f"s{n_state}")
+        store = StateStore(spark, root)
+        store.commit(1, {}, merge={"t": MergeDelta(
+            rows(spark.range(n_state)), ["key"])})
+        upd = spark.range(500).union(spark.range(10**9, 10**9 + 500))
+        dels = rows(spark.range(1000, 1100)).select("key")
+        store.commit(2, {}, merge={"t": MergeDelta(rows(upd), ["key"],
+                                                   dels)})
+        with open(os.path.join(root, "checkpoints", "r000002.json")) as f:
+            ent = json.load(f)["merge"]["t"]
+        assert len(ent["delta_bytes"]) == 1  # the batch stacked, no fold
+        assert store.read("t").count() == n_state + 500 - 100
+        return ent["delta_bytes"][0], ent["base_bytes"]
+
+    small, base_small = delta_and_base_bytes(50_000)
+    large, base_large = delta_and_base_bytes(100_000)
+    assert abs(large - small) <= 0.1 * small
+    assert base_large > 1.5 * base_small
+    assert small < base_small / 10
 
 
 def test_commit_falls_back_to_serial_on_unmaterialized_cache(

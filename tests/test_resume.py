@@ -14,6 +14,7 @@
 import glob
 import json
 import os
+from functools import partial
 
 import pytest
 
@@ -62,13 +63,20 @@ def _kill_after_staged(store):
     return "_write_all", write_all
 
 
+# the merge tables round 1 folds: their first delta lands on an empty base
+ROUND1_FOLDS = {"pages", "edges", "discovered", "button_cache"}
+
+
 def _kill_mid_fold(store):
     real = store._write_all
 
     def write_all(jobs, workers):
-        if all(hint is None for *_, hint in jobs):
+        if not any(isinstance(df, partial) and df.func == store._view
+                   for _n, _v, df in jobs):
             return real(jobs, workers)  # staged / late writes
-        real(jobs[:1], workers)  # fold jobs carry a bytes hint
+        # fold jobs write the view of the table's committed versions
+        assert {name for name, *_ in jobs} >= ROUND1_FOLDS
+        real(jobs[:1], workers)
         raise Kill
     return "_write_all", write_all
 

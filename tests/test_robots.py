@@ -85,3 +85,50 @@ def test_host_budget_column_matches_python(spark):
            for r in df.select("host", col.alias("b")).collect()}
     exp = {h: cfg.host_budget(h or "") for h in hosts}
     assert got == exp
+
+
+def test_robots_columns_take_first_matching_rule(spark):
+    """Admission and no-follow columns consult the robots rules the way
+    EngineConfig does: the FIRST rule matching the host decides, so a
+    permissive rule for a subdomain shadows a stricter rule for its
+    parent domain (and a later duplicate rule for the same host)."""
+    from types import SimpleNamespace
+
+    from pyspark.sql import functions as F
+
+    from x227f_spark.urlutil import Url
+
+    cfg = EngineConfig(
+        banned_hosts=("banned.test",),
+        no_follow_hosts=("nf.test",),
+        robots=(RobotsRule("x.a.test"),
+                RobotsRule("a.test", banned=True, no_follow=True,
+                           disallow_prefixes=("/p",)),
+                RobotsRule("y.b.test", disallow_prefixes=("/q",)),
+                RobotsRule("b.test", banned=True, no_follow=True),
+                RobotsRule("c.test", no_follow=True,
+                           disallow_prefixes=("/p", "/r")),
+                RobotsRule("c.test", banned=True)),
+    )
+    urls = ["http://x.a.test/p1", "http://x.a.test/q", "http://a.test/p1",
+            "http://a.test/z", "http://sub.x.a.test/p", "http://xa.test/p",
+            "http://y.b.test/q1", "http://y.b.test/z", "http://z.y.b.test/q",
+            "http://b.test/", "http://c.test/r/x", "http://c.test/z",
+            "http://banned.test/p", "http://s.banned.test/",
+            "http://nf.test/p", "http://plain.com/p"]
+    rows = [(u, Url.parse(u).host) for u in urls]
+    df = spark.createDataFrame(rows, "url string, host string")
+    eng = SimpleNamespace(cfg=cfg)
+    got = {r["url"]: (r["ok"], r["nf"]) for r in df.select(
+        "url",
+        CrawlEngine._admit_ok_col(eng, F.col("url"), F.col("host"))
+        .alias("ok"),
+        CrawlEngine._no_follow_col(eng, F.col("host")).alias("nf"),
+    ).collect()}
+    exp = {}
+    for u, host in rows:
+        path = Url.parse(u).path
+        exp[u] = (not (cfg.effective_banned(host)
+                       or cfg.disallowed(host, path)),
+                  cfg.effective_no_follow(host))
+    assert got == exp

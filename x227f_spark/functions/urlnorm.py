@@ -101,12 +101,15 @@ def sha256_trunc32_col(data: Column) -> Column:
 # F1 — host suffix-list membership (pure Column)
 # ---------------------------------------------------------------------------
 
+def host_matches_col(host: Column, domain: str) -> Column:
+    """main.rs:300-309 — ``host`` is ``domain`` or one of its subdomains."""
+    return (host == domain) | host.endswith("." + domain)
+
+
 def hosts_list_contains_col(host: Column, hosts: tuple[str, ...]) -> Column:
-    """main.rs:300-309 — exact match or '.'+domain suffix, constant list."""
-    if not hosts:
-        return F.lit(False)
+    """main.rs:300-309 over a constant list: any domain matches."""
     cond = F.lit(False)
     for d in hosts:
-        cond = cond | (host == d) | host.endswith("." + d)
+        cond = cond | host_matches_col(host, d)
     return cond
 

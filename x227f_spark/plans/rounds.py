@@ -41,6 +41,7 @@ from ..operators.pagerank import pagerank_iterations
 from ..operators.qcache import unpersist
 from ..sources.catalog import MergeDelta, StateStore
 from ..functions.urlnorm import (
+    host_matches_col,
     hosts_list_contains_col,
     page_id_udf,
     url_host,
@@ -93,6 +94,17 @@ def _obs_get(obs: Observation, defaults: dict) -> dict:
             "periodic queue-stats reconciliation will correct any drift",
             str(e).splitlines()[0][:120], defaults)
         return defaults
+
+
+def _robots_col(robots, host_col, value, default):
+    """``value(rule)`` of the first rule in ``robots`` whose host matches
+    ``host_col``, else ``default``: ``EngineConfig._robots_rule`` as one
+    first-match ``when`` chain (the rules are config constants)."""
+    out = default
+    for rule in reversed(robots):  # the tuple's first rule ends outermost
+        out = F.when(host_matches_col(host_col, rule.host), value(rule)) \
+            .otherwise(out)
+    return out
 
 
 class CrawlEngine:
@@ -170,8 +182,7 @@ class CrawlEngine:
 
     def _sub(self, key: str, t_start: float) -> None:
         """Sub-stage timing attribution (keys with a dot are diagnostics
-        nested under the five coarse marks; scaling_report aggregates only
-        the coarse stages)."""
+        nested under the five coarse marks)."""
         self._tm[key] = round(time.monotonic() - t_start, 3)
 
     def _persist(self, df: DataFrame) -> DataFrame:
@@ -216,17 +227,18 @@ class CrawlEngine:
         literal Column predicates (robots rules are config constants, so
         Catalyst constant-folds the whole gate)."""
         cfg = self.cfg
-        blocked = hosts_list_contains_col(host_col, cfg.banned_hosts)
         path_col = F.regexp_extract(
             F.regexp_replace(url_col, r"^[a-z][a-z0-9+.-]*://[^/]*", ""),
             r"^([^?#]*)", 1)
-        for rule in cfg.robots:
-            matches = (host_col == rule.host) | host_col.endswith("." + rule.host)
-            if rule.banned:
-                blocked = blocked | matches
+
+        def rule_blocks(rule):
+            cond = F.lit(rule.banned)
             for p in rule.disallow_prefixes:
-                blocked = blocked | (matches & path_col.startswith(p))
-        return ~blocked
+                cond = cond | path_col.startswith(p)
+            return cond
+        return ~(hosts_list_contains_col(host_col, cfg.banned_hosts)
+                 | _robots_col(cfg.robots, host_col, rule_blocks,
+                               F.lit(False)))
 
     def _host_budget_col(self, host_col):
         """``cfg.host_budget`` expanded to a literal Column expression (the
@@ -250,33 +262,26 @@ class CrawlEngine:
         delay = F.lit(cfg.default_crawl_delay)
         for k in sorted(cfg.host_crawl_delays,
                         key=lambda s: len(s.split("."))):
-            cond = host_col == k
-            if len(k.split(".")) >= 2:
-                cond = cond | host_col.endswith("." + k)
+            cond = host_matches_col(host_col, k) \
+                if len(k.split(".")) >= 2 else host_col == k
             delay = F.when(cond, F.lit(cfg.host_crawl_delays[k])) \
                      .otherwise(delay)
-        # robots rules outrank the dict; later rules folded first so the
-        # tuple's first match ends outermost. NULL (no rule matched, or
-        # matched with no crawl_delay override) falls to the dict chain.
-        rule_delay = F.lit(None).cast("int")
-        for rule in reversed(cfg.robots):
-            cond = (host_col == rule.host) \
-                | host_col.endswith("." + rule.host)
-            rule_delay = F.when(
-                cond, F.lit(rule.crawl_delay_sec).cast("int")) \
-                .otherwise(rule_delay)
+        # robots rules outrank the dict. NULL (no rule matched, or matched
+        # with no crawl_delay override) falls to the dict chain.
+        rule_delay = _robots_col(
+            cfg.robots, host_col,
+            lambda rule: F.lit(rule.crawl_delay_sec).cast("int"),
+            F.lit(None).cast("int"))
         delay = F.coalesce(rule_delay, delay)
         return F.when(delay <= 0, F.lit(cfg.fetch_cap)).otherwise(
             F.greatest(F.floor(F.lit(cfg.round_seconds) / delay)
                        .cast("int"), F.lit(1)))
 
     def _no_follow_col(self, host_col):
-        cond = hosts_list_contains_col(host_col, self.cfg.no_follow_hosts)
-        for rule in self.cfg.robots:
-            if rule.no_follow:
-                cond = cond | (host_col == rule.host) \
-                    | host_col.endswith("." + rule.host)
-        return cond
+        """``EngineConfig.effective_no_follow`` as a Column."""
+        return hosts_list_contains_col(host_col, self.cfg.no_follow_hosts) \
+            | _robots_col(self.cfg.robots, host_col,
+                          lambda rule: F.lit(rule.no_follow), F.lit(False))
 
     # -- state access -------------------------------------------------------
     def table(self, name: str) -> DataFrame:

@@ -64,10 +64,6 @@ def get_spark(cores: int | None = None, app_name: str = "x227f_spark",
         # driven; a long-running crawl driver may otherwise never GC)
         .config("spark.cleaner.periodicGC.interval", "10min")
     )
-    local_dir = os.environ.get("SPARK_GRAFT_LOCAL_DIR")
-    if local_dir:
-        # e.g. a tmpfs for shuffle/spill when benchmarking compute scaling
-        builder = builder.config("spark.local.dir", local_dir)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

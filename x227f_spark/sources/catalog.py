@@ -26,14 +26,14 @@ whole life (checked on every checkpoint load and every commit):
   O(state): the reference mutates `pages`/`edges`/`button_cache` in place
   under a mutex (data.rs:298-326), and a naive snapshot port rewrote those
   tables wholesale every round. Compaction is ADAPTIVE (LSM-style
-  absorption): when the accumulated delta bytes (plus this round's,
-  estimated from the last write) reach half the base size — or the stack
-  reaches ``COMPACT_AT`` — the commit writes the merged table as a new
-  base instead of stacking another delta. A light-churn round (batch ≪
-  state, the 10^10 design point) writes O(batch) with ≤1.5x amortized
-  write amplification; an extreme-churn round (batch ≈ state, e.g. a
-  recrawl-everything bench) degrades gracefully to exactly one full
-  write per round — the copy-on-write cost, never worse.
+  absorption): when the accumulated delta bytes (this round's included)
+  reach half the base size — or the stack reaches ``COMPACT_AT`` — the
+  commit writes the merged table as a new base instead of stacking another
+  delta. A light-churn round (batch ≪ state, the 10^10 design point)
+  writes O(batch) with ≤1.5x amortized write amplification; an
+  extreme-churn round (batch ≈ state, e.g. a recrawl-everything bench)
+  degrades gracefully to exactly one full write per round — the
+  copy-on-write cost, never worse.
 
   Why merge-on-read and not bucketed partial rewrites: with
   ``hash(key) % B`` buckets a batch of k uniformly-hashed keys touches
@@ -156,10 +156,6 @@ class StateStore:
         self.root = root
         os.makedirs(os.path.join(root, "tables"), exist_ok=True)
         os.makedirs(os.path.join(root, "checkpoints"), exist_ok=True)
-        # per-table bytes of the most recent write — feeds the adaptive
-        # write-spread sizing (driver-side fs metadata; not persisted: the
-        # first write after a resume just uses the full spread once)
-        self._last_write_bytes: dict[str, int] = {}
         self.last_timing: dict = {}  # per-phase seconds of the last commit
         self._load_checkpoint()
         self._collect()  # orphans of a round killed before its publish
@@ -194,50 +190,6 @@ class StateStore:
                 raise ValueError(
                     f"checkpoint lists tables in both {a} and {b} modes: "
                     f"{mixed} (corrupt or hand-edited checkpoint)")
-
-    # write-spread keys: hash-repartition each staged table on its key so
-    # parquet+zstd encoding parallelizes across cores instead of the 1-2
-    # AQE-coalesced partitions a small shuffle ends with. Content-neutral:
-    # nothing downstream assumes file order.
-    WRITE_KEYS = {
-        "pages": "page_id", "seen": "page_id", "edges": "src",
-        "scores": "node_id", "discovered": "node_id", "queue": "queue_pos",
-        "button_cache": "url", "media": "media_ref", "trace": "seq",
-    }
-
-    # target bytes per written file/partition when sizing the write spread
-    # from the table's last observed write (guide §6 output sizing, scaled
-    # down to the per-round delta regime: a 1M-design-point delta of
-    # 100-300 MB still fans out to the full 2x-cores spread, while a
-    # KB-sized bench delta stops paying 64 write tasks + 64-file dirs per
-    # table per round)
-    WRITE_TARGET_BYTES = 4 * 1024 * 1024
-
-    def _spread(self, name: str, df: DataFrame,
-                bytes_hint: int | None = None) -> DataFrame:
-        key = self.WRITE_KEYS.get(name)
-        if key is None:
-            return df
-        # 2x cores, not 1x: a write stage of exactly `cores` tasks is a
-        # barrier over the slowest-of-N draw with zero scheduling slack —
-        # on this box the slowest of 16 runs ~40% over median vs ~8% for
-        # the slowest of 4 (BENCH/NOTES.md "Measured machine noise"), which
-        # is why write scaled worst (2.37x) in the r5 legs. Two tasks per
-        # core lets dynamic scheduling absorb the tail, the same sizing
-        # rule the session applies to shuffle.partitions (session.py).
-        n = 2 * self.spark.sparkContext.defaultParallelism
-        # size-adapt: the table's last written size (or the caller's hint,
-        # for folds) bounds how many useful write tasks exist. A table
-        # seen at B bytes gets ceil(B / WRITE_TARGET_BYTES) partitions,
-        # capped at the 2x-cores spread — big deltas keep the full r6
-        # write parallelism, small ones stop burning a 64-task barrier
-        # per table per round. First-ever writes (no history) use the
-        # full spread; the estimate self-corrects on the next round.
-        est = bytes_hint if bytes_hint is not None \
-            else self._last_write_bytes.get(name)
-        if est is not None:
-            n = max(1, min(n, -(-int(est) // self.WRITE_TARGET_BYTES)))
-        return df.repartition(n, df[key])
 
     # append tables merge their accumulated delta dirs into one once this
     # many pile up — the snapshot-store analogue of Iceberg's rewrite_data_
@@ -321,13 +273,12 @@ class StateStore:
                         name, _merge_entry({"keys": item.keys})
                     )["deltas"].append(v)
                     df = item.frame()
-                jobs.append((name, v, lambda df=df: df, None))
+                jobs.append((name, v, lambda df=df: df))
             return jobs
 
         def write(jobs, workers):
-            for (name, _v, _df, _h), b in zip(
-                    jobs, self._write_all(jobs, workers)):
-                self._last_write_bytes[name] = b
+            for (name, _v, _df), b in zip(jobs,
+                                          self._write_all(jobs, workers)):
                 if name in new["merge"]:
                     new["merge"][name]["delta_bytes"].append(b)
 
@@ -352,13 +303,11 @@ class StateStore:
         # throughput optimization). On a real deployment each table write
         # is its own job against the catalog (Iceberg commit) and the race
         # does not exist at all.
-        # Pool size scales with the session's parallelism: a 1M round
-        # stages ~7 write jobs, and a fixed pool of 4 serializes them into
-        # two waves with a one-job tail wave that idles most of a 16-core
-        # box (r5 scaling legs: write stage speedup 2.37x vs ~3x for the
-        # data plane).
+        # Pool size follows the session's parallelism, floored at 4: a
+        # round stages one write job per table (9 in the crawl), most of
+        # them a task or two, so several run at once to keep the cores busy.
         workers = max(4, self.spark.sparkContext.defaultParallelism // 2)
-        if any(self._has_unloaded_cache(df()) for _n, _v, df, _h in jobs):
+        if any(self._has_unloaded_cache(df()) for _n, _v, df in jobs):
             _log.warning(
                 "staged commit plan references an unmaterialized cache — "
                 "falling back to serial writes for this round (pool-unsafe "
@@ -381,13 +330,9 @@ class StateStore:
         for mode in ("append", "merge"):
             for name, ent in new[mode].items():
                 if self._fold_due(mode, ent):
-                    old = _versions(new, name)
-                    hint = sum(_dir_bytes(self._table_path(name, x))
-                               for x in old)
-                    folds.append((name, max(old) + 1,
-                                  partial(self._view, name, new), hint))
-        for (name, v, _df, _h), b in zip(folds,
-                                         self._write_all(folds, workers)):
+                    folds.append((name, max(_versions(new, name)) + 1,
+                                  partial(self._view, name, new)))
+        for (name, v, _df), b in zip(folds, self._write_all(folds, workers)):
             if name in new["append"]:
                 new["append"][name] = [v]
             else:
@@ -466,23 +411,23 @@ class StateStore:
         return (ent["base"] is None or n >= self.MERGE_STACK_MAX or small_cap
                 or dsum >= max(0.5 * ent["base_bytes"], self.MIN_FOLD_BYTES))
 
-    def _write_version(self, name: str, v: int, df: DataFrame,
-                       bytes_hint: int | None) -> int:
-        """Spread ``df`` and write it as version ``v`` of ``name``; returns
-        the bytes written."""
+    def _write_version(self, name: str, v: int, df: DataFrame) -> int:
+        """Write ``df`` as version ``v`` of ``name``; returns the bytes
+        written. The file layout is the producer's (AQE coalesces its last
+        shuffle to the data's size)."""
         path = self._table_path(name, v)
-        self._spread(name, df, bytes_hint).write.mode("overwrite").parquet(path)
+        df.write.mode("overwrite").parquet(path)
         return _dir_bytes(path)
 
     def _write_all(self, jobs: list, workers: int) -> list[int]:
-        """Write ``(name, version, df_fn, bytes_hint)`` jobs through a
-        bounded pool of ``workers`` threads (serially when ``workers`` is 1
-        or there is a single job) and return the bytes each wrote. A failed
-        write is retried once, serially."""
+        """Write ``(name, version, df_fn)`` jobs through a bounded pool of
+        ``workers`` threads (serially when ``workers`` is 1 or there is a
+        single job) and return the bytes each wrote. A failed write is
+        retried once, serially."""
         def attempt(job):
-            name, v, df, hint = job
+            name, v, df = job
             try:
-                return self._write_version(name, v, df(), hint), None
+                return self._write_version(name, v, df()), None
             except Exception as e:
                 return None, e
 
